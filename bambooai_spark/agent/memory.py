@@ -15,10 +15,20 @@ set-based ``upsert_with_dedup`` MERGE (operators/memory.py) so a billion-row
 memory behaves exactly like a ten-row one. The intent embedder is pluggable
 and defaults to the deterministic hash embedder (no model in this
 container); production swaps in a real API/model wrapper.
+
+Reuse contract: ``retrieve`` keeps its raw top-1 (the intent and its
+embedding, the table object it scanned, that record's rank and cosine) even
+below the recall gate. An ``add`` of the same intent against the same,
+unchanged table whose top-1 is a strong match (≥ 0.94) with a rank at
+least as high is exactly the MERGE's "blocked, dropped" branch, so it
+returns without a Spark job. Any other write runs the MERGE. Writes to the
+table are serialized by a lock, so concurrent turns sharing one memory
+lose no record. (An external backend keeps its own write path.)
 """
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -90,7 +100,19 @@ class EpisodicMemory:
         # the reference's Pinecone/Qdrant wrappers, qa_retrieval.py:237-501);
         # None → the parquet-native Spark table below
         self.backend = backend
-        self._df: DataFrame = spark.createDataFrame([], _SCHEMA)
+        # zero partitions: a local empty list would be spread over
+        # defaultParallelism empty partitions, and the first MERGE's cross
+        # join would run that many tasks per new-row partition (at
+        # local[8], 64 tasks and ~9 s for the first write into a new store)
+        self._df: DataFrame = spark.createDataFrame(
+            spark.sparkContext.emptyRDD(), _SCHEMA
+        )
+        # guards add's read-merge-reassign of _df and its skip check
+        self._lock = threading.Lock()
+        # retrieve's raw top-1: (intent, query vector, scanned table,
+        # rank, cosine) — what add needs to recognise a write the MERGE
+        # would drop
+        self._top1: tuple | None = None
 
     @property
     def records(self) -> DataFrame:
@@ -124,16 +146,19 @@ class EpisodicMemory:
         q = self.spark.createDataFrame(
             [(qvec,)], StructType([StructField("_q", ArrayType(FloatType()))])
         )
+        table = self._df  # one snapshot: scanned and remembered
         rows = (
-            self._df.crossJoin(F.broadcast(q))
+            table.crossJoin(F.broadcast(q))
             .withColumn("_cos", cosine("embedding", "_q"))
             .orderBy(F.desc("_cos"), "record_id")
             .limit(1)
             .collect()
         )
         if not rows or rows[0]["_cos"] is None:
+            self._top1 = None
             return None
         r = rows[0]
+        self._top1 = (intent, qvec, table, r["rank"], r["_cos"])
         if r["_cos"] < self.similarity_threshold:
             return None
         return MemoryHit(
@@ -186,30 +211,52 @@ class EpisodicMemory:
             else:
                 self.backend.upsert(record_id, vec, meta)
             return True
-        new = self.spark.createDataFrame(
-            [
-                (
-                    record_id,
-                    intent,
-                    plan or "",
-                    data_model or "",
-                    code or "",
-                    int(rank),
-                    vec,
-                )
-            ],
-            _SCHEMA,
-        )
-        self._df = upsert_with_dedup(
-            self._df,
-            new,
-            id_col="record_id",
-            vec_col="embedding",
-            rank_col="rank",
-            threshold=STRONG_MATCH,
-            min_rank=self.min_rank,
-        ).localCheckpoint()  # truncate the ever-growing merge lineage
+        with self._lock:  # concurrent turns share one memory (service.py)
+            if self._dropped_by_merge(intent, vec, int(rank)):
+                return True
+            new = self.spark.createDataFrame(
+                [
+                    (
+                        record_id,
+                        intent,
+                        plan or "",
+                        data_model or "",
+                        code or "",
+                        int(rank),
+                        vec,
+                    )
+                ],
+                _SCHEMA,
+            )
+            self._df = upsert_with_dedup(
+                self._df,
+                new,
+                id_col="record_id",
+                vec_col="embedding",
+                rank_col="rank",
+                threshold=STRONG_MATCH,
+                min_rank=self.min_rank,
+            ).localCheckpoint()  # truncate the ever-growing merge lineage
         return True
+
+    def _dropped_by_merge(self, intent: str, vec: list, rank: int) -> bool:
+        """True when ``retrieve``'s top-1 for this very intent and vector,
+        taken on the current table object, is a strong match ranked at
+        least as high. ``upsert_with_dedup`` then picks that same record
+        (same cosine arithmetic; best cosine, then lowest id) and drops the
+        new one, leaving the table unchanged. Called under the lock."""
+        top = self._top1
+        if top is None:
+            return False
+        t_intent, t_vec, t_table, t_rank, t_cos = top
+        return (
+            t_intent == intent
+            and t_vec == vec
+            and t_table is self._df
+            and t_rank is not None
+            and t_cos >= STRONG_MATCH  # False for NaN: the MERGE decides
+            and rank <= t_rank
+        )
 
     # -- persistence (the reference's vector store survives restarts;
     # here the store is one parquet table — same durability contract) --

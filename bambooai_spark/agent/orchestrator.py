@@ -11,6 +11,14 @@ Everything that touches data is deterministic repo code (profiler bounded
 context, sandbox execution); the LLM is an injected callable, so the loop
 is testable with scripted responses (SURVEY §5: LLM nondeterminism stays
 out of the correctness gate).
+
+Reuse contract: a turn runs only the Spark work its answer needs. The
+frame profile is computed once per ``DataFrame`` object and reused by every
+later turn on that same object; it is computed only when a prompt reads it
+(never for the research route, never for user code that runs clean). A
+frame adopted from a successful turn is a new object and is re-profiled.
+To re-profile a frame whose source files were rewritten in place, build a
+new ``DataFrame`` for it.
 """
 
 from __future__ import annotations
@@ -114,13 +122,22 @@ class AgentOrchestrator:
         # RemoteSparkExecutor in the reference's EXECUTION_MODE=api split
         # (executor/client.py) — same execute() surface either way
         self.executor = executor or SparkCodeExecutor()
+        # one-slot profile cache: (frame object, its prompt context)
+        self._ctx_slot: tuple[DataFrame, str] | None = None
 
     # -- pipeline stages ---------------------------------------------
 
     def _context(self, df: DataFrame) -> str:
-        return prompts.df_context(
-            dataframe_summary_to_string(df), get_dataframe_columns(df)
-        )
+        """Bounded frame profile for the prompts, computed once per frame
+        object (the profile runs several Spark jobs; repeat turns on the
+        same frame reuse it byte for byte)."""
+        slot = self._ctx_slot
+        if slot is None or slot[0] is not df:
+            ctx = prompts.df_context(
+                dataframe_summary_to_string(df), get_dataframe_columns(df)
+            )
+            slot = self._ctx_slot = (df, ctx)
+        return slot[1]
 
     @staticmethod
     def _with_image(user: str, image: str | None):
@@ -226,7 +243,6 @@ class AgentOrchestrator:
         repair round: the dedicated user-code corrector prompt (edits kept
         minimal, the user's structure preserved — reference
         bambooai.py:829-833); later rounds use the normal corrector."""
-        ctx = self._context(df)
         errors: list[str] = []
         corrections = 0
         gdp = generated_datasets_path
@@ -236,6 +252,8 @@ class AgentOrchestrator:
         while not res.ok and corrections < MAX_ERROR_CORRECTIONS:
             errors.append(res.error)
             corrections += 1
+            # the profile is read only by the corrector prompts
+            ctx = self._context(df)
             if corrections == 1:
                 code = self._correct_user_code(code, res.error, ctx)
             else:
@@ -316,11 +334,6 @@ class AgentOrchestrator:
         generated_datasets_path: str | None = None,
     ) -> AgentResult:
         out = self.output
-        ctx = self._context(df)
-        aux_tables: dict[str, DataFrame] = {}
-        if aux_datasets:
-            aux_ctx, aux_tables = self._aux_context(aux_datasets)
-            ctx += aux_ctx
         if self.exploratory:
             expert, intent = self._route(question, image)
         else:
@@ -340,6 +353,13 @@ class AgentOrchestrator:
                 df=None, code=None, stdout=None, summary=answer,
                 expert=expert, intent=None, plan=None,
             )
+        # the analyst path's prompts read the profile (and aux previews);
+        # the research path above needs neither
+        ctx = self._context(df)
+        aux_tables: dict[str, DataFrame] = {}
+        if aux_datasets:
+            aux_ctx, aux_tables = self._aux_context(aux_datasets)
+            ctx += aux_ctx
         # retrieve-before-plan (reference bambooai.py:265-291): a memory hit
         # short-circuits the planner (plan cache) and seeds the generator
         recall = self.memory.retrieve(intent) if self.memory else None

@@ -12,6 +12,10 @@ Specs marked ``headline`` form the bench.py suite at sf0.1.
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+import threading
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -103,6 +107,22 @@ def spec(
         return fn
 
     return wrap
+
+
+_SCRATCH_LOCK = threading.Lock()
+_scratch_parent: str | None = None
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A fresh directory for a spec's corpus or store. All of them live
+    under one per-process parent that is removed when the process exits,
+    so repeated spec builds leave nothing behind in the temp dir."""
+    global _scratch_parent
+    with _SCRATCH_LOCK:
+        if _scratch_parent is None:
+            _scratch_parent = tempfile.mkdtemp(prefix="bbai_suite_")
+            atexit.register(shutil.rmtree, _scratch_parent, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_parent)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -5049,7 +5069,6 @@ def unigram_logprob_docs(spark, sf_dir):
 )
 def delete_corpus_docs(spark, sf_dir):
     import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from bambooai_spark.operators.writer import (  # noqa: PLC0415
         append_corpus,
@@ -5058,7 +5077,7 @@ def delete_corpus_docs(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     out = os.path.join(
-        tempfile.mkdtemp(prefix="bbai_delete_spec_"), "corpus"
+        _scratch_dir("bbai_delete_spec_"), "corpus"
     )
     append_corpus(
         d, out, partition_by=("lang",), max_records_per_file=100
@@ -5104,7 +5123,6 @@ def delete_corpus_docs(spark, sf_dir):
 )
 def update_corpus_docs(spark, sf_dir):
     import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from bambooai_spark.operators.writer import (  # noqa: PLC0415
         append_corpus,
@@ -5113,7 +5131,7 @@ def update_corpus_docs(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     out = os.path.join(
-        tempfile.mkdtemp(prefix="bbai_update_spec_"), "corpus"
+        _scratch_dir("bbai_update_spec_"), "corpus"
     )
     append_corpus(
         d, out, partition_by=("lang",), max_records_per_file=100
@@ -5150,14 +5168,13 @@ def update_corpus_docs(spark, sf_dir):
 )
 def stream_decon_ingest_docs(spark, sf_dir):
     import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from bambooai_spark.streaming.documents import (  # noqa: PLC0415
         stream_ingest_to_corpus,
     )
 
     d = _t(spark, sf_dir, "documents")
-    root = tempfile.mkdtemp(prefix="bbai_sdecon_spec_")
+    root = _scratch_dir("bbai_sdecon_spec_")
     src = os.path.join(root, "parts")
     # two source files -> two micro-batches (maxFilesPerTrigger=1)
     d.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(src)
@@ -5244,7 +5261,6 @@ def stream_decon_ingest_docs(spark, sf_dir):
 )
 def boilerplate_cut_docs(spark, sf_dir):
     import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from bambooai_spark.operators.gram_store import (  # noqa: PLC0415
         boilerplate_cut,
@@ -5253,7 +5269,7 @@ def boilerplate_cut_docs(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     store = os.path.join(
-        tempfile.mkdtemp(prefix="bbai_gstore_spec_"), "gstore"
+        _scratch_dir("bbai_gstore_spec_"), "gstore"
     )
     build_gram_store(d, "text", store, k=25, min_count=2)
     batch = d.filter(F.col("doc_id") % 4 == 1)
@@ -5319,7 +5335,6 @@ def boilerplate_cut_docs(spark, sf_dir):
 )
 def sync_corpus_docs(spark, sf_dir):
     import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from bambooai_spark.operators.writer import (  # noqa: PLC0415
         append_corpus,
@@ -5329,7 +5344,7 @@ def sync_corpus_docs(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     out = os.path.join(
-        tempfile.mkdtemp(prefix="bbai_sync_spec_"), "corpus"
+        _scratch_dir("bbai_sync_spec_"), "corpus"
     )
     append_corpus(
         d, out, partition_by=("lang",), max_records_per_file=100
@@ -5509,7 +5524,6 @@ def sync_corpus_docs(spark, sf_dir):
 )
 def curation_pipeline_docs(spark, sf_dir):
     import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from bambooai_spark.operators.gram_store import (  # noqa: PLC0415
         build_gram_store,
@@ -5519,7 +5533,7 @@ def curation_pipeline_docs(spark, sf_dir):
     )
 
     d = _t(spark, sf_dir, "documents")
-    tmp = tempfile.mkdtemp(prefix="bbai_pipeline_spec_")
+    tmp = _scratch_dir("bbai_pipeline_spec_")
     store = os.path.join(tmp, "gstore")
     build_gram_store(d, "text", store, k=25, min_count=2)
     benchmark = d.filter(F.col("doc_id") % 100 == 0)
@@ -5619,7 +5633,6 @@ def curation_pipeline_docs(spark, sf_dir):
 )
 def curation_report_docs(spark, sf_dir):
     import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from bambooai_spark.operators.curation import (  # noqa: PLC0415
         curate_corpus,
@@ -5627,7 +5640,7 @@ def curation_report_docs(spark, sf_dir):
     from bambooai_spark.operators.writer import append_corpus  # noqa: PLC0415
 
     d = _t(spark, sf_dir, "documents")
-    tmp = tempfile.mkdtemp(prefix="bbai_report_spec_")
+    tmp = _scratch_dir("bbai_report_spec_")
     corpus = os.path.join(tmp, "corpus")
     append_corpus(
         d, corpus, partition_by=("lang",), max_records_per_file=200
@@ -5700,7 +5713,6 @@ def curation_report_docs(spark, sf_dir):
 )
 def merge_corpus_docs(spark, sf_dir):
     import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from bambooai_spark.operators.writer import (  # noqa: PLC0415
         append_corpus,
@@ -5710,7 +5722,7 @@ def merge_corpus_docs(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     out = os.path.join(
-        tempfile.mkdtemp(prefix="bbai_merge_spec_"), "corpus"
+        _scratch_dir("bbai_merge_spec_"), "corpus"
     )
     append_corpus(
         d, out, partition_by=("lang",), max_records_per_file=100
@@ -5813,7 +5825,6 @@ def merge_corpus_docs(spark, sf_dir):
 )
 def surgery_corpus_docs(spark, sf_dir):
     import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from bambooai_spark.operators.dedup import (  # noqa: PLC0415
         exact_substring_cut,
@@ -5828,7 +5839,7 @@ def surgery_corpus_docs(spark, sf_dir):
     )
 
     d = _t(spark, sf_dir, "documents")
-    tmp = tempfile.mkdtemp(prefix="bbai_surgery_spec_")
+    tmp = _scratch_dir("bbai_surgery_spec_")
     out = os.path.join(tmp, "corpus")
     append_corpus(
         d, out, partition_by=("lang",), max_records_per_file=100
@@ -5874,7 +5885,6 @@ _WARM_SURGERY: dict[str, tuple[str, str]] = {}
 
 def _warm_surgery_fixture(spark, sf_dir):
     import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from bambooai_spark.operators.gram_store import (  # noqa: PLC0415
         build_gram_store,
@@ -5887,7 +5897,7 @@ def _warm_surgery_fixture(spark, sf_dir):
     got = _WARM_SURGERY.get(sf_dir)
     if got and all(os.path.exists(p) for p in got):
         return got
-    tmp = tempfile.mkdtemp(prefix="bbai_warm_surgery_")
+    tmp = _scratch_dir("bbai_warm_surgery_")
     out = os.path.join(tmp, "corpus")
     store = os.path.join(tmp, "gstore")
     d = _t(spark, sf_dir, "documents")
@@ -6045,7 +6055,6 @@ def surgery_warm_cut_docs(spark, sf_dir):
 )
 def surgery_delta_cut_docs(spark, sf_dir):
     import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from bambooai_spark.operators.dedup import (  # noqa: PLC0415
         exact_substring_cut,
@@ -6055,7 +6064,7 @@ def surgery_delta_cut_docs(spark, sf_dir):
     )
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="bbai_delta_spec_")
+    tmp = _scratch_dir("bbai_delta_spec_")
     cp = os.path.join(tmp, "corpus")
     d.filter(F.col("doc_id") % 5 != 0).write.parquet(cp)
     base = spark.read.parquet(cp)
@@ -6114,7 +6123,6 @@ def surgery_delta_cut_docs(spark, sf_dir):
 )
 def refresh_vector_embeddings(spark, sf_dir):
     import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from bambooai_spark.operators.similarity import (  # noqa: PLC0415
         md5_centroids,
@@ -6133,7 +6141,7 @@ def refresh_vector_embeddings(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings").withColumn(
         "vid", F.col("vec_id").cast("string")
     )
-    base = tempfile.mkdtemp(prefix="bbai_refresh_spec_")
+    base = _scratch_dir("bbai_refresh_spec_")
     corpus = os.path.join(base, "corpus")
     store = os.path.join(base, "store")
     append_corpus_txn(
@@ -6205,7 +6213,6 @@ def refresh_vector_embeddings(spark, sf_dir):
 )
 def corpus_changes_docs(spark, sf_dir):
     import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from bambooai_spark.operators.writer import (  # noqa: PLC0415
         append_corpus_txn,
@@ -6213,7 +6220,7 @@ def corpus_changes_docs(spark, sf_dir):
     )
 
     d = _t(spark, sf_dir, "documents")
-    out = os.path.join(tempfile.mkdtemp(prefix="bbai_cdc_spec_"), "corpus")
+    out = os.path.join(_scratch_dir("bbai_cdc_spec_"), "corpus")
     for b in range(3):
         append_corpus_txn(
             d.filter(F.col("doc_id") % 3 == b), out, b,
@@ -6250,7 +6257,6 @@ def corpus_changes_docs(spark, sf_dir):
 )
 def pruned_read_docs(spark, sf_dir):
     import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from bambooai_spark.operators.writer import (  # noqa: PLC0415
         read_corpus,
@@ -6258,7 +6264,7 @@ def pruned_read_docs(spark, sf_dir):
     )
 
     d = _t(spark, sf_dir, "documents")
-    out = os.path.join(tempfile.mkdtemp(prefix="bbai_prune_spec_"), "corpus")
+    out = os.path.join(_scratch_dir("bbai_prune_spec_"), "corpus")
     write_corpus(
         d, out, partition_by=("lang",), cluster_by=("n_chars",),
         max_records_per_file=50,
@@ -6344,7 +6350,6 @@ def sketch_distinct_events(spark, sf_dir):
 )
 def evolve_corpus_docs(spark, sf_dir):
     import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from bambooai_spark.operators.writer import (  # noqa: PLC0415
         append_corpus,
@@ -6353,7 +6358,7 @@ def evolve_corpus_docs(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     out = os.path.join(
-        tempfile.mkdtemp(prefix="bbai_evolve_spec_"), "corpus"
+        _scratch_dir("bbai_evolve_spec_"), "corpus"
     )
     append_corpus(
         d.filter(F.col("doc_id") % 2 == 0),
@@ -6401,14 +6406,13 @@ def evolve_corpus_docs(spark, sf_dir):
 )
 def export_shards_docs(spark, sf_dir):
     import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from bambooai_spark.operators.export import (  # noqa: PLC0415
         export_jsonl_shards,
     )
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "lang")
-    out = os.path.join(tempfile.mkdtemp(prefix="bbai_export_spec_"), "exp")
+    out = os.path.join(_scratch_dir("bbai_export_spec_"), "exp")
     export_jsonl_shards(d, out, "doc_id", n_shards=8, keep_pos=True)
     back = spark.read.json(out)
     return back.select(
@@ -6976,12 +6980,11 @@ def kll_quantiles_events(spark, sf_dir):
 )
 def near_dup_gate_docs(spark, sf_dir):
     import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from bambooai_spark.operators.writer import append_corpus  # noqa: PLC0415
 
     d = _t(spark, sf_dir, "documents")
-    out = os.path.join(tempfile.mkdtemp(prefix="bbai_gate_spec_"), "corpus")
+    out = os.path.join(_scratch_dir("bbai_gate_spec_"), "corpus")
     opts = {"hash": "md5", "num_hashes": 16, "bands": 4}
     append_corpus(
         d.filter(F.col("doc_id") % 2 == 0), out,
@@ -7011,7 +7014,6 @@ def near_dup_gate_docs(spark, sf_dir):
 )
 def vector_store_embeddings(spark, sf_dir):
     import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from bambooai_spark.operators.similarity import (  # noqa: PLC0415
         md5_centroids,
@@ -7023,7 +7025,7 @@ def vector_store_embeddings(spark, sf_dir):
     )
 
     e = _t(spark, sf_dir, "embeddings")
-    out = os.path.join(tempfile.mkdtemp(prefix="bbai_vs_spec_"), "vstore")
+    out = os.path.join(_scratch_dir("bbai_vs_spec_"), "vstore")
     write_vector_corpus(
         e, out,
         centroids=md5_centroids(e, "vec_id", "embedding", 8),
@@ -7109,7 +7111,6 @@ def vector_store_embeddings(spark, sf_dir):
 )
 def vector_store_pq_embeddings(spark, sf_dir):
     import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from bambooai_spark.operators.pq import md5_pq_codebooks  # noqa: PLC0415
     from bambooai_spark.operators.similarity import (  # noqa: PLC0415
@@ -7122,7 +7123,7 @@ def vector_store_pq_embeddings(spark, sf_dir):
     )
 
     e = _t(spark, sf_dir, "embeddings")
-    out = os.path.join(tempfile.mkdtemp(prefix="bbai_vspq_spec_"), "vstore")
+    out = os.path.join(_scratch_dir("bbai_vspq_spec_"), "vstore")
     write_vector_corpus(
         e, out,
         centroids=md5_centroids(e, "vec_id", "embedding", 8),

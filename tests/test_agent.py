@@ -381,6 +381,129 @@ def test_memory_strong_match_dedup_keeps_higher_rank(spark):
     assert len(rows) == 1 and rows[0]["record_id"] == "mem-2"
 
 
+def _next_job(spark) -> int:
+    """Job-id watermark: the id the next submitted Spark job will get."""
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def _recalled_memory(spark, intent, rank=9):
+    """A one-record memory whose last retrieve hit that very record."""
+    from bambooai_spark.agent.memory import EpisodicMemory
+
+    mem = EpisodicMemory(spark)
+    mem.add("mem-1", intent, plan="the plan", code="df = df", rank=rank)
+    assert mem.retrieve(intent).score == pytest.approx(1.0)
+    return mem
+
+
+def test_memory_recalled_readd_skips_the_merge(spark):
+    """Re-adding the record a retrieve just recalled, at an equal or lower
+    rank, is the MERGE's dropped branch: no Spark job, same table object,
+    same rows."""
+    intent = "count orders per month in 1997"
+    mem = _recalled_memory(spark, intent)
+    table = mem.records
+    rows = table.collect()
+    j0 = _next_job(spark)
+    assert mem.add("mem-1", intent, plan="the plan", code="df = df", rank=9)
+    assert mem.add("mem-9", intent, plan="weaker", rank=7)
+    assert _next_job(spark) == j0
+    assert mem.records is table and mem.records.collect() == rows
+
+
+def test_memory_readd_merges_when_it_can_change_the_store(spark):
+    """A higher rank replaces, an add after the table changed takes the
+    MERGE path even for the recalled intent, and a first ask inserts."""
+    intent = "count orders per month in 1997"
+    mem = _recalled_memory(spark, intent)
+    assert mem.add("mem-1", intent, plan="better", rank=10)
+    [row] = mem.records.collect()
+    assert (row["rank"], row["plan"]) == (10, "better")
+
+    # the recalled top-1 was taken on the table the replace swapped out
+    j0 = _next_job(spark)
+    assert mem.add("mem-1", intent, plan="stale", rank=9)
+    assert _next_job(spark) > j0
+    assert [r["plan"] for r in mem.records.collect()] == ["better"]
+
+    other = "alpha bravo charlie delta echo foxtrot golf hotel"
+    assert mem.retrieve(other) is None  # below the recall gate
+    assert mem.add("mem-2", other, plan="other", rank=9)
+    assert sorted(r["plan"] for r in mem.records.collect()) == [
+        "better", "other"
+    ]
+
+
+def test_memory_concurrent_adds_keep_both_records(spark):
+    """Two threads adding distinct intents at once (the service hands one
+    memory to every thread's orchestrator) lose neither record."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from bambooai_spark.agent.memory import EpisodicMemory
+
+    mem = EpisodicMemory(spark)
+    start = threading.Barrier(2, timeout=60)
+    intents = {
+        "mem-a": "count orders per month in 1997",
+        "mem-b": "alpha bravo charlie delta echo foxtrot golf hotel",
+    }
+
+    def add(rid):
+        start.wait()
+        return mem.add(rid, intents[rid], rank=9)
+
+    with ThreadPoolExecutor(2) as pool:
+        futures = [pool.submit(add, r) for r in intents]
+        assert all(f.result(timeout=120) for f in futures)
+    assert sorted(r["record_id"] for r in mem.records.collect()) == [
+        "mem-a", "mem-b"
+    ]
+
+
+def test_context_profiled_once_per_frame_object(spark, monkeypatch):
+    """A repeat turn on the same frame object runs no profile job and sends
+    a byte-identical codegen prompt; a new frame object is re-profiled;
+    the research route and clean user code never profile."""
+    from bambooai_spark.agent import orchestrator
+
+    jobs: list[int] = []
+    real = orchestrator.dataframe_summary_to_string
+
+    def counted(df):
+        j0 = _next_job(spark)
+        out = real(df)
+        jobs.append(_next_job(spark) - j0)
+        return out
+
+    monkeypatch.setattr(orchestrator, "dataframe_summary_to_string", counted)
+    orders = load_table(spark, SF_DIR, "orders")
+    llm = _llm(GOOD_CODE)
+    orch = AgentOrchestrator(spark, llm, planning=False, summarize=False)
+    q = "Count the number of orders per month in 1997"
+    assert orch.converse(q, orders).ok and orch.converse(q, orders).ok
+    assert len(jobs) == 1 and jobs[0] > 0
+    first, second = [c for c in llm.calls if "write PySpark code" in c[0]]
+    assert first == second
+    assert orch.converse(q, load_table(spark, SF_DIR, "orders")).ok
+    assert len(jobs) == 2
+
+    research = ScriptedLLM(
+        {
+            "route analytics questions": (
+                "```yaml\nrequires_dataset: false\n"
+                "expert: 'Research Specialist'\nconfidence: 8\n```"
+            ),
+            "Research Specialist": "Prose answer.",
+        }
+    )
+    fresh = load_table(spark, SF_DIR, "orders")
+    assert AgentOrchestrator(spark, research).converse("What is TPC-H?", fresh).ok
+    clean = AgentOrchestrator(spark, llm, summarize=False)
+    assert clean.run_user_code("df = df.limit(3)", fresh).ok
+    assert len(jobs) == 2
+
+
 # ---------------------------------------------------------------- user code
 # (reference bambooai.py:616-623 — lifecycle entry 3: user-authored code
 # skips routing/planning/codegen; first failure gets the dedicated
