@@ -448,6 +448,12 @@ def collect_file_stats(
     stat column. Cost is a scan of exactly the target files — at a txn
     commit that is the batch, never the corpus.
 
+    One scan per output: a writer that also needs the manifest counts of
+    the same files takes them from this aggregate instead of scanning
+    again (the txn append groups by file and partition once and folds
+    both the manifest delta and this doc from the rows; see
+    :func:`stat_aggs` and :func:`stats_doc`).
+
     ``schema`` pins the read (evolution-aware: files lacking a column
     yield non-null-count 0 for it, which the pruner reads as "no row
     here can match a predicate on that column" — exactly right).
@@ -457,35 +463,68 @@ def collect_file_stats(
     if schema is not None:
         reader = reader.schema(schema)
     df = reader.parquet(*(files or [data_root]))
-    present, absent = [], []
-    for c in dict.fromkeys(columns):
-        if c in df.columns and _category(df.schema[c].dataType) is not None:
-            present.append(c)
-        elif c not in df.columns:
-            absent.append(c)
-        # configured but non-prunable type: no entry at all — recording
-        # nn=0 would wrongly prune every file on a predicate against it
-    aggs = [F.count(F.lit(1)).alias("__n")]
+    present, aggs = stat_aggs(df, columns)
+    rows = (
+        df.select(F.col("_metadata.file_path").alias("__f"), *present)
+        .groupBy("__f")
+        .agg(F.count(F.lit(1)).alias("__n"), *aggs)
+        .collect()
+    )
+    return stats_doc(
+        spark, data_root, columns, df.schema, rows, key_prefix=key_prefix
+    )
+
+
+def _recordable(schema, columns) -> list[str]:
+    """The configured stat columns ``schema`` holds with a prunable
+    type."""
+    types = {f.name: f.dataType for f in schema.fields}
+    return [
+        c for c in dict.fromkeys(columns)
+        if c in types and _category(types[c]) is not None
+    ]
+
+
+def stat_aggs(df: DataFrame, columns) -> tuple[list[str], list]:
+    """The stat columns ``df`` can record and their per-file
+    min/max/non-null-count aggregates — the one copy of the stat
+    aggregate, shared by :func:`collect_file_stats` and the txn append's
+    one-scan staged bookkeeping."""
+    present = _recordable(df.schema, columns)
+    aggs = []
     for c in present:
         aggs += [
             F.min(c).alias(f"__mn_{c}"),
             F.max(c).alias(f"__mx_{c}"),
             F.count(c).alias(f"__nn_{c}"),
         ]
-    rows = (
-        df.select(F.col("_metadata.file_path").alias("__f"), *present)
-        .groupBy("__f")
-        .agg(*aggs)
-        .collect()
-    )
+    return present, aggs
+
+
+def stats_doc(
+    spark: SparkSession,
+    data_root: str,
+    columns,
+    schema,
+    rows,
+    *,
+    key_prefix: str = "",
+) -> dict:
+    """Fold per-file aggregate rows (``__f`` file path, ``__n`` row
+    count, and :func:`stat_aggs`' columns over ``schema``) into a stats
+    doc, files keyed in sorted order so the same files always give the
+    same JSON. A configured column the read lacks records nn=0 (no row
+    can match a predicate on it); one of a non-prunable type records no
+    entry at all (nn=0 would wrongly prune every file)."""
+    present = _recordable(schema, columns)
+    absent = [c for c in dict.fromkeys(columns) if c not in schema.names]
     qroot = qualified_root(spark, data_root)
-    cats = {c: _category(df.schema[c].dataType) for c in present}
     out: dict[str, dict] = {}
     for r in rows:
         cols = {}
         for c in present:
             mn, mx = _ser(r[f"__mn_{c}"]), _ser(r[f"__mx_{c}"])
-            if cats[c] == "str":
+            if _category(schema[c].dataType) == "str":
                 if isinstance(mn, str):
                     mn = _trunc_min(mn)
                 if isinstance(mx, str):
@@ -510,7 +549,7 @@ def collect_file_stats(
         # driver sharing BOTH the session zone and the OS zone (the
         # composite frame key — see tz_frame)
         "tz": tz_frame(spark),
-        "files": out,
+        "files": dict(sorted(out.items())),
     }
 
 

@@ -37,6 +37,7 @@ from bambooai_spark.operators.writer import (
     _iter_commit_markers,
     _join,
     _load_manifest_doc,
+    _read_ledger,
     _walk_files,
 )
 
@@ -196,10 +197,8 @@ def suggest_maintenance(
             n_sigs = spark.read.parquet(sigs_dir).count()
         except AnalysisException:
             n_sigs = 0
-        try:
-            n_ledger = spark.read.parquet(_join(path, LEDGER_DIR)).count()
-        except AnalysisException:
-            n_ledger = 0
+        ledger = _read_ledger(spark, _join(path, LEDGER_DIR))
+        n_ledger = 0 if ledger is None else ledger.count()
         if n_ledger and n_sigs < 0.9 * n_ledger:
             add(
                 "signature_gaps", "warn",

@@ -63,6 +63,7 @@ from bambooai_spark.operators.writer import (
     _fs_read_text,
     _fs_write_text_atomic,
     _join,
+    _read_ledger,
 )
 
 PARAMS_NAME = "_PARAMS.json"
@@ -194,8 +195,10 @@ def _live_store_sigs(
     sdir, ldir = _join(path, SIGS_DIR), _join(path, LEDGER_DIR)
     try:
         sigs = spark.read.parquet(sdir)
-        ledger = spark.read.parquet(ldir)
     except AnalysisException:
+        return None
+    ledger = _read_ledger(spark, ldir)
+    if ledger is None:
         return None
     return (
         sigs.join(ledger, sigs["fp"] == ledger["fp"], "left_semi")

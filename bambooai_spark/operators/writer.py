@@ -29,6 +29,9 @@ MANIFEST_NAME = "_corpus_manifest.json"
 # underscore prefix → invisible to spark.read.parquet(corpus_path), so the
 # ledger can live inside the corpus directory without polluting reads
 LEDGER_DIR = "_fingerprints"
+# the ledger holds one md5 hex column; reading it under this pinned
+# schema skips the one-task footer-inference job a schema-less read runs
+LEDGER_SCHEMA = "fp string"
 SIGS_DIR = "_minhash_sigs"  # the near-dup gate's signature store
 # transactional-append bookkeeping (underscore-prefixed for the same
 # invisibility): per-batch staged writes + commit markers
@@ -54,6 +57,22 @@ def _schema_json_of(df: DataFrame) -> dict:
 
 
 _UNLOADED = object()  # sentinel: "caller did not preload the manifest"
+
+
+def _read_ledger(spark: SparkSession, ledger_path: str) -> DataFrame | None:
+    """The fingerprint ledger under :data:`LEDGER_SCHEMA`, or None when
+    the directory is missing or holds no data files (only ``_SUCCESS``
+    after an empty first append) — the case a schema-less read raised
+    ``AnalysisException`` for, and a schema'd one would answer with an
+    empty relation. The file check reads the listing the relation
+    already made; it runs no Spark job."""
+    from pyspark.errors import AnalysisException  # noqa: PLC0415
+
+    try:
+        ledger = spark.read.schema(LEDGER_SCHEMA).parquet(ledger_path)
+    except AnalysisException:
+        return None
+    return ledger if ledger.inputFiles() else None
 
 
 def _load_manifest_doc(spark: SparkSession, path: str) -> dict | None:
@@ -423,6 +442,24 @@ def _combine_deltas(
                 continue
             tgt[c] = (tgt.get(c) or 0) + (v or 0)
     return list(out.values())
+
+
+def _files_and_delta(
+    matches: DataFrame, partition_by, aggs
+) -> tuple[list[str], list[dict]]:
+    """The affected-file list (sorted) and the per-partition manifest
+    delta of a staged rewrite from ONE aggregate over the matched rows
+    (carrying ``_file``), grouped by ``(_file, *partition_by)``: the
+    files are the groups' paths, and the driver folds each partition's
+    per-file rows into its delta row (``aggs`` must be sums, so the
+    per-file parts add up). Driver rows are O(files touched), the bound
+    the file list already has."""
+    rows = matches.groupBy("_file", *partition_by).agg(*aggs).collect()
+    files = sorted({r["_file"] for r in rows})
+    per_file = [
+        {k: v for k, v in r.asDict().items() if k != "_file"} for r in rows
+    ]
+    return files, _combine_deltas(per_file, [], partition_by)
 
 
 def _latest_numeric_batch(spark: SparkSession, path: str) -> int | None:
@@ -862,8 +899,16 @@ def build_manifest(
 ) -> DataFrame:
     """Manifest from the written files themselves (re-runnable on any
     existing corpus dir): group by partition columns, count rows and
-    DISTINCT data files, and read each file's on-disk size via the
-    ``_metadata`` hidden column — aggregation-side, no driver listing.
+    data files, and read each file's on-disk size via the ``_metadata``
+    hidden column — aggregation-side, no driver listing.
+
+    One scan, one aggregation: a file is counted (and its size summed)
+    at its first row (``_metadata.row_index == 0``), which exists once
+    per file however the file is split across tasks — no distinct-count
+    expand and its two extra shuffles. The O(partitions) result is
+    sorted in one task rather than by a distributed sort. Writers that
+    also need per-file stats of the same files take both from one
+    grouped scan instead (see ``_scan_staged``).
 
     ``schema`` pins the read schema INCLUDING partition-column types —
     without it Spark's partition-value inference can re-type directory
@@ -875,15 +920,15 @@ def build_manifest(
         if schema is not None
         else spark.read.parquet(path)
     )
+    first_row = F.col("_metadata.row_index") == 0
     aggs = [
         F.count(F.lit(1)).alias("n_rows"),
-        F.countDistinct(F.col("_metadata.file_path")).alias("n_files"),
-        # each file's size repeats per row; sum one size per distinct file
+        F.count(F.when(first_row, F.lit(1))).alias("n_files"),
+        # each file's size repeats per row; sum it at the file's first row
         F.sum(
-            F.when(
-                F.col("_metadata.row_index") == 0,
-                F.col("_metadata.file_size"),
-            ).otherwise(F.lit(0))
+            F.when(first_row, F.col("_metadata.file_size")).otherwise(
+                F.lit(0)
+            )
         ).alias("n_bytes"),
     ]
     if token_col:
@@ -893,7 +938,8 @@ def build_manifest(
         back.select(*cols)
         .groupBy(*partition_by)
         .agg(*aggs)
-        .orderBy(*partition_by)
+        .coalesce(1)
+        .sortWithinPartitions(*partition_by)
     )
 
 
@@ -1249,14 +1295,12 @@ def _dedup_against_corpus(
         .dropDuplicates(["_fp"])
     )
 
-    if ledger_exists:
-        try:
-            hist = spark.read.parquet(ledger_path).select(
-                F.col("fp").alias("_fp")
-            )
-            batch = batch.join(hist, "_fp", "left_anti")
-        except AnalysisException:
-            pass  # ledger dir holds only _SUCCESS (empty first append)
+    # None: the ledger dir holds only _SUCCESS (empty first append)
+    hist = _read_ledger(spark, ledger_path) if ledger_exists else None
+    if hist is not None:
+        batch = batch.join(
+            hist.select(F.col("fp").alias("_fp")), "_fp", "left_anti"
+        )
 
     return batch.localCheckpoint(eager=True)
 
@@ -1577,40 +1621,26 @@ def append_corpus_txn(
     with ThreadPoolExecutor(max_workers=1) as pool:
         fledger = pool.submit(_write_ledger)
         writer.partitionBy(*partition_by).parquet(_join(stage, "corpus"))
-        # the staged files ARE this batch's exact contribution, so the
-        # delta carries full fidelity — n_files/n_bytes included (renames
-        # preserve both), which the fold adds instead of dropping; the
-        # plain append can't do this (its files land mixed into history).
-        # The read-back pins the BATCH's schema so partition-value
-        # inference can't re-type the keys (see build_manifest).
-        delta = [
-            r.asDict()
-            for r in build_manifest(
-                spark, _join(stage, "corpus"),
-                partition_by=partition_by, token_col=token_col,
-                schema=batch.drop("_fp").schema,
-            ).collect()
-        ]
-        file_stats = None
         from bambooai_spark.operators.filestats import (  # noqa: PLC0415
             stats_config,
         )
 
-        stats_cols = stats_config(spark, path)
-        if stats_cols:
-            from bambooai_spark.operators.filestats import (  # noqa: PLC0415
-                collect_file_stats,
-            )
-
-            # stats ride the freeze: computed ONCE from the staged files
-            # (a bounded batch-sized scan), keyed by the deterministic
-            # committed basename, replayed verbatim from the frozen info —
-            # no corpus listing ever enters the per-micro-batch path
-            file_stats = collect_file_stats(
-                spark, _join(stage, "corpus"), stats_cols,
-                schema=batch.drop("_fp").schema,
-                key_prefix=f"b{batch_id}-",
-            )
+        # the staged files ARE this batch's exact contribution, so the
+        # delta carries full fidelity — n_files/n_bytes included (renames
+        # preserve both), which the fold adds instead of dropping; the
+        # plain append can't do this (its files land mixed into history).
+        # Stats ride the freeze: keyed by the deterministic committed
+        # basename, replayed verbatim from the frozen info — no corpus
+        # listing ever enters the per-micro-batch path. Both come from
+        # ONE scan of the staged files, read under the BATCH's schema so
+        # partition-value inference can't re-type the keys.
+        delta, file_stats = _scan_staged(
+            spark, _join(stage, "corpus"),
+            partition_by=partition_by, token_col=token_col,
+            schema=batch.drop("_fp").schema,
+            stats_cols=stats_config(spark, path),
+            key_prefix=f"b{batch_id}-",
+        )
         fledger.result()
     info = {
         "batch_id": batch_id,
@@ -1635,6 +1665,87 @@ def append_corpus_txn(
     # recomputed.
     _record_sigs_last(fp_sigs, path, near_dup_opts)
     return manifest
+
+
+def _scan_staged(
+    spark: SparkSession,
+    root: str,
+    *,
+    partition_by,
+    token_col: str | None,
+    schema,
+    stats_cols,
+    key_prefix: str,
+) -> tuple[list[dict], dict | None]:
+    """The manifest delta and (``stats_cols`` set) the stats doc of one
+    staged output from ONE aggregate grouped by ``(file, *partition_by)``:
+    each file's rows, on-disk size, tokens and stat min/max/non-null
+    count. The driver folds the O(files) rows into both — the delta has
+    :func:`build_manifest`'s rows, keys and order over the same files,
+    the doc is :func:`~bambooai_spark.operators.filestats
+    .collect_file_stats`'s — where the two calls scanned the output
+    twice."""
+    from bambooai_spark.operators.filestats import (  # noqa: PLC0415
+        stat_aggs,
+        stats_doc,
+    )
+
+    df = spark.read.schema(schema).parquet(root)
+    present, saggs = stat_aggs(df, stats_cols or [])
+    aggs = [
+        F.count(F.lit(1)).alias("__n"),
+        F.max("__size").alias("__size"),
+        *([F.sum(F.col(token_col)).alias("__tok")] if token_col else []),
+        *saggs,
+    ]
+    cols = dict.fromkeys(
+        [*partition_by, *([token_col] if token_col else []), *present]
+    )
+    rows = (
+        df.select(
+            F.col("_metadata.file_path").alias("__f"),
+            F.col("_metadata.file_size").alias("__size"),
+            *cols,
+        )
+        .groupBy("__f", *partition_by)
+        .agg(*aggs)
+        .collect()
+    )
+    parts: dict[tuple, dict] = {}
+    for r in rows:
+        key = tuple(r[c] for c in partition_by)
+        d = parts.setdefault(
+            key,
+            {
+                **dict(zip(partition_by, key)),
+                "n_rows": 0,
+                "n_files": 0,
+                "n_bytes": 0,
+                **({"n_tokens": None} if token_col else {}),
+            },
+        )
+        d["n_rows"] += r["__n"]
+        d["n_files"] += 1
+        d["n_bytes"] += r["__size"]
+        if token_col and r["__tok"] is not None:
+            d["n_tokens"] = (d["n_tokens"] or 0) + r["__tok"]
+    for d in parts.values():
+        if d.get("n_tokens") is not None:
+            d["n_tokens"] = int(d["n_tokens"])  # build_manifest's cast
+    # build_manifest's order: ascending, NULL partition values first
+    delta = [
+        parts[k]
+        for k in sorted(
+            parts, key=lambda t: tuple((v is not None, v) for v in t)
+        )
+    ]
+    doc = (
+        stats_doc(spark, root, stats_cols, df.schema, rows,
+                  key_prefix=key_prefix)
+        if stats_cols
+        else None
+    )
+    return delta, doc
 
 
 def _commit_staged(
@@ -1854,23 +1965,19 @@ def _compact_corpus_inner(
         # the ledger fragments the same way (one file set per appended
         # batch) — rewrite it alongside, same freeze
         has_ledger = False
-        ledger_df = None
-        if _fs_exists(spark, _join(path, LEDGER_DIR)):
-            try:
-                # ONE ledger DataFrame feeds both the rewrite and the
-                # signature semi-join below; persisted because a
-                # months-old ledger is the large fragmented relation
-                # this op exists to compact — scanning it twice doubles
-                # the dominant read
-                ledger_df = spark.read.parquet(_join(path, LEDGER_DIR))
-                ledger_df = ledger_df.persist()
-                ledger_df.repartition(
-                    # default parallelism, not 1: must not funnel
-                    num_tasks or spark.sparkContext.defaultParallelism
-                ).write.mode("overwrite").parquet(_join(tmp, "ledger"))
-                has_ledger = True
-            except AnalysisException:
-                ledger_df = None  # no data files — nothing to compact
+        # None: no ledger, or no data files in it — nothing to compact
+        ledger_df = _read_ledger(spark, _join(path, LEDGER_DIR))
+        if ledger_df is not None:
+            # ONE ledger DataFrame feeds both the rewrite and the
+            # signature semi-join below; persisted because a months-old
+            # ledger is the large fragmented relation this op exists to
+            # compact — scanning it twice doubles the dominant read
+            ledger_df = ledger_df.persist()
+            ledger_df.repartition(
+                # default parallelism, not 1: must not funnel
+                num_tasks or spark.sparkContext.defaultParallelism
+            ).write.mode("overwrite").parquet(_join(tmp, "ledger"))
+            has_ledger = True
         # the near-dup signature store compacts alongside: rows whose fp
         # left the ledger (takedowns) are inert at gate time but every
         # gate scans them — prune to live fps here, where the ledger is
@@ -2622,25 +2729,51 @@ def _stage_update(
                 "absent from"
             )
         deletes = tagged.filter(~hit)
+    # manifest delta: rows unchanged; the token delta is exact when
+    # the token column itself is assigned and zero otherwise (the
+    # manifest sums the STORED column, which an unassigned update
+    # leaves as-is) — always present when the corpus tracks tokens,
+    # so the fold keeps the manifest's token column intact
+    aggs = [F.lit(0).cast("long").alias("n_rows")]
+    if token_col:
+        tok_delta = (
+            (
+                F.coalesce(F.sum(new_vals[token_col]), F.lit(0))
+                - F.coalesce(F.sum(F.col(token_col)), F.lit(0))
+            )
+            if token_col in new_vals
+            else F.lit(0)
+        )
+        aggs.append(tok_delta.cast("long").alias("n_tokens"))
     try:
-        if delete_unmatched:
-            # every row is matched-updated or unmatched-deleted, so
-            # every file holding a row is affected — snapshot sync
-            # rewrites the corpus by construction
-            files_rel = tagged.select("_file").distinct()
-        else:
-            files_rel = matches.select("_file").distinct()
         # the affected-file list (which also materializes the matches
         # cache) and the MERGE insert-admission job below are
         # independent reads, so the file list rides a pool thread while
         # the admission anti-joins run (guide §2.6); resolved before
         # its first use at the no-match short-circuit. On the non-merge
-        # verbs nothing runs in between and the submit degrades to the
-        # old serial collect.
+        # verbs nothing runs in between and the submit degrades to a
+        # serial collect.
         from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
 
         pool = ThreadPoolExecutor(max_workers=3)
-        ffiles = pool.submit(files_rel.collect)
+        if delete_unmatched:
+            # every row is matched-updated or unmatched-deleted, so
+            # every file holding a row is affected — snapshot sync
+            # rewrites the corpus by construction; the file list comes
+            # from every row, the delta from the matches alone
+            files_rel = tagged.select("_file").distinct()
+            ffiles = pool.submit(
+                lambda: (
+                    sorted(r["_file"] for r in files_rel.collect()), None
+                )
+            )
+        else:
+            # one aggregate over the matches gives both the file list
+            # and the delta
+            files_rel = matches.select("_file").distinct()
+            ffiles = pool.submit(
+                _files_and_delta, matches, partition_by, aggs
+            )
         fpc = None
         old_fps = new_fps = None
         if text_changes:
@@ -2668,10 +2801,7 @@ def _stage_update(
                 # update), or equals an updated row's NEW text, or
                 # repeats an earlier-keyed insert's text, is dropped
                 ifp = fingerprint(text_col, normalize=True)
-                try:
-                    lfps = spark.read.parquet(ledger_path).select("fp")
-                except AnalysisException:
-                    lfps = None
+                lfps = _read_ledger(spark, ledger_path)
                 if del_fps is not None and lfps is not None:
                     # rows leaving via the delete clause free their
                     # fingerprints: an insert may legitimately carry a
@@ -2725,29 +2855,14 @@ def _stage_update(
                 .agg(*iaggs).collect()
             ]
             n_ins = sum(r["n_rows"] for r in ins_delta)
-        data_files = sorted(r["_file"] for r in ffiles.result())
+        data_files, delta = ffiles.result()
         if not data_files and not n_ins:
             return None
-        # manifest delta: rows unchanged; the token delta is exact when
-        # the token column itself is assigned and zero otherwise (the
-        # manifest sums the STORED column, which an unassigned update
-        # leaves as-is) — always present when the corpus tracks tokens,
-        # so the fold keeps the manifest's token column intact
-        aggs = [F.lit(0).cast("long").alias("n_rows")]
-        if token_col:
-            tok_delta = (
-                (
-                    F.coalesce(F.sum(new_vals[token_col]), F.lit(0))
-                    - F.coalesce(F.sum(F.col(token_col)), F.lit(0))
-                )
-                if token_col in new_vals
-                else F.lit(0)
-            )
-            aggs.append(tok_delta.cast("long").alias("n_tokens"))
-        delta = [
-            r.asDict()
-            for r in matches.groupBy(*partition_by).agg(*aggs).collect()
-        ]
+        if delta is None:
+            delta = [
+                r.asDict()
+                for r in matches.groupBy(*partition_by).agg(*aggs).collect()
+            ]
         if n_ins:
             delta = _combine_deltas(delta, ins_delta, partition_by)
         if deletes is not None:
@@ -2840,12 +2955,11 @@ def _stage_update(
                     del_fps if leaving is None
                     else leaving.unionByName(del_fps)
                 )
-            try:
-                ledger = spark.read.parquet(ledger_path).withColumn(
+            ledger = _read_ledger(spark, ledger_path)
+            if ledger is not None:
+                ledger = ledger.withColumn(
                     "_file", F.col("_metadata.file_path")
                 )
-            except AnalysisException:
-                ledger = None
             parts = []
             if ledger is not None and leaving is not None:
                 lf_rel = (
@@ -3052,19 +3166,15 @@ def _stage_delete(
     matches = tagged.filter(pred).persist()
     try:
         files_rel = matches.select("_file").distinct()
-        data_files = sorted(r["_file"] for r in files_rel.collect())
-        if not data_files:
-            return None
         aggs = [(-F.count(F.lit(1))).cast("long").alias("n_rows")]
         if token_col:
             aggs.append(
                 (-F.coalesce(F.sum(F.col(token_col)), F.lit(0)))
                 .cast("long").alias("n_tokens")
             )
-        delta = [
-            r.asDict()
-            for r in matches.groupBy(*partition_by).agg(*aggs).collect()
-        ]
+        data_files, delta = _files_and_delta(matches, partition_by, aggs)
+        if not data_files:
+            return None
         kept = _filter_to_files(tagged, files_rel, data_files).filter(
             ~F.coalesce(pred, F.lit(False))  # NULL predicate rows are kept
         ).drop("_file")
@@ -3113,13 +3223,12 @@ def _stage_delete(
                 fps = matches.select(
                     fingerprint(text_col, normalize=True).alias("fp")
                 ).distinct()
-                try:
-                    ledger = spark.read.parquet(ledger_path).withColumn(
+                # None: the ledger dir holds no data files
+                ledger = _read_ledger(spark, ledger_path)
+                if ledger is not None:
+                    ledger = ledger.withColumn(
                         "_file", F.col("_metadata.file_path")
                     )
-                except AnalysisException:
-                    ledger = None  # ledger dir holds no data files
-                if ledger is not None:
                     lf_rel = (
                         ledger.join(fps, "fp", "left_semi")
                         .select("_file").distinct()
@@ -4256,10 +4365,8 @@ def validate_corpus(
         elif back is None:
             n_stale = 0
             if ledger_exists:
-                try:
-                    n_stale = spark.read.parquet(lpath).count()
-                except AnalysisException:
-                    n_stale = 0
+                stale = _read_ledger(spark, lpath)
+                n_stale = 0 if stale is None else stale.count()
             rows.append(
                 (
                     "ledger",
@@ -4269,17 +4376,15 @@ def validate_corpus(
                     else "no data, no ledger entries",
                 )
             )
+        elif (ledger := _read_ledger(spark, lpath)) is None:
+            # a ledger dir holding no data files is unreadable
+            rows.append(("ledger", False, f"unreadable or no {text_col}"))
         else:
             try:
                 # NULL fingerprints (NULL text) never match an anti-join
                 # key — exclude them on BOTH sides or they read as
                 # forever-missing on a healthy corpus
-                ledger = (
-                    spark.read.parquet(lpath)
-                    .select("fp")
-                    .filter(F.col("fp").isNotNull())
-                    .distinct()
-                )
+                ledger = ledger.filter(F.col("fp").isNotNull()).distinct()
                 fps = (
                     back.select(
                         fingerprint(text_col, normalize=True).alias("fp")

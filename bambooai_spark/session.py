@@ -13,6 +13,14 @@ every default below is chosen for a multi-executor cluster:
   previews/plots — the only place data ever reaches the driver).
 - Session timezone pinned to UTC so timestamp math is reproducible and
   matches the DuckDB oracle (naive timestamps treated as UTC).
+- Generated-code cache raised from Spark's 100 classes to 1000
+  (``spark.sql.codegen.cache.maxEntries``, static, so builder-only). One
+  corpus maintenance cycle (append, update, delete, merge, compact)
+  compiles about 190 distinct classes and one batch-operator round 129,
+  so at the default the cache evicts each cycle's classes before the
+  next cycle needs them and every cycle recompiles them all.
+- Core count defaults to the CPUs this process may run on
+  (``SPARK_GRAFT_CPUS`` overrides), not a fixed cluster-sized number.
 """
 
 from __future__ import annotations
@@ -35,8 +43,15 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+# generated classes kept compiled per JVM (Spark's default is 100): one
+# corpus maintenance cycle compiles about 190 distinct classes and one
+# batch-operator round 129, so at 100 every cycle recompiles them all
+CODEGEN_CACHE_ENTRIES = 1000
+
+
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
@@ -88,6 +103,7 @@ def get_session(
         .config("spark.sql.files.maxPartitionBytes", "256m")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 import time
 
 import pytest
@@ -34,12 +33,12 @@ def _docs(spark, n=40):
     return load_table(spark, SF_DIR, "documents").limit(n)
 
 
-def _corpus_dir():
-    return os.path.join(tempfile.mkdtemp(prefix="bbai_lease_"), "corpus")
+def _corpus_dir(tmp_path):
+    return os.path.join(str(tmp_path), "corpus")
 
 
-def test_acquire_release_lifecycle(spark):
-    path = _corpus_dir()
+def test_acquire_release_lifecycle(spark, tmp_path):
+    path = _corpus_dir(tmp_path)
     os.makedirs(path, exist_ok=True)
     lease_file = os.path.join(path, LEASE_NAME)
     with corpus_lease(spark, path) as lease:
@@ -50,8 +49,8 @@ def test_acquire_release_lifecycle(spark):
     assert not os.path.exists(lease_file)  # released on exit
 
 
-def test_second_writer_blocked(spark):
-    path = _corpus_dir()
+def test_second_writer_blocked(spark, tmp_path):
+    path = _corpus_dir(tmp_path)
     os.makedirs(path, exist_ok=True)
     with corpus_lease(spark, path):
         with pytest.raises(CorpusLeaseHeld, match="write-leased"):
@@ -61,11 +60,11 @@ def test_second_writer_blocked(spark):
         pass
 
 
-def test_stale_takeover_and_fencing(spark):
+def test_stale_takeover_and_fencing(spark, tmp_path):
     """A dead holder's lease (heartbeat older than its ttl) is taken
     over; the zombie's ensure() then fails loudly and its release()
     leaves the new holder's lease intact."""
-    path = _corpus_dir()
+    path = _corpus_dir(tmp_path)
     os.makedirs(path, exist_ok=True)
     zombie = CorpusLease(spark, path, ttl_s=0.2).acquire()
     time.sleep(0.5)  # heartbeat goes stale
@@ -80,9 +79,9 @@ def test_stale_takeover_and_fencing(spark):
     new.release()
 
 
-def test_live_lease_not_taken_over(spark):
+def test_live_lease_not_taken_over(spark, tmp_path):
     """Heartbeats keep a lease live past its nominal age."""
-    path = _corpus_dir()
+    path = _corpus_dir(tmp_path)
     os.makedirs(path, exist_ok=True)
     holder = CorpusLease(spark, path, ttl_s=0.4).acquire()
     for _ in range(3):
@@ -93,10 +92,10 @@ def test_live_lease_not_taken_over(spark):
     holder.release()
 
 
-def test_crash_restart_reacquires_with_pinned_owner(spark):
+def test_crash_restart_reacquires_with_pinned_owner(spark, tmp_path):
     """A crash-restarted job with a PINNED owner id re-enters its own
     lease instead of deadlocking until the TTL."""
-    path = _corpus_dir()
+    path = _corpus_dir(tmp_path)
     os.makedirs(path, exist_ok=True)
     CorpusLease(spark, path, owner="job-42").acquire()  # "crashed" holder
     again = CorpusLease(spark, path, owner="job-42").acquire()
@@ -104,10 +103,10 @@ def test_crash_restart_reacquires_with_pinned_owner(spark):
     again.release()
 
 
-def test_unreadable_lease_counts_as_held(spark):
+def test_unreadable_lease_counts_as_held(spark, tmp_path):
     """A torn/garbage lease doc reads as a fresh foreign lease (mtime as
     heartbeat) — never silently claimed."""
-    path = _corpus_dir()
+    path = _corpus_dir(tmp_path)
     os.makedirs(path, exist_ok=True)
     with open(os.path.join(path, LEASE_NAME), "w") as f:
         f.write("{not json")
@@ -115,9 +114,9 @@ def test_unreadable_lease_counts_as_held(spark):
         CorpusLease(spark, path).acquire()
 
 
-def test_txn_append_under_lease(spark):
+def test_txn_append_under_lease(spark, tmp_path):
     """The happy path: a leased transactional append commits normally."""
-    path = _corpus_dir()
+    path = _corpus_dir(tmp_path)
     with corpus_lease(spark, path) as lease:
         append_corpus_txn(_docs(spark), path, 1, lease=lease)
         assert spark.read.parquet(path).count() > 0
@@ -125,10 +124,10 @@ def test_txn_append_under_lease(spark):
     assert not os.path.exists(os.path.join(path, LEASE_NAME))
 
 
-def test_lost_lease_aborts_txn_before_commit(spark):
+def test_lost_lease_aborts_txn_before_commit(spark, tmp_path):
     """A holder that lost a TTL takeover fails BEFORE publishing: no
     commit marker, no data files, no manifest."""
-    path = _corpus_dir()
+    path = _corpus_dir(tmp_path)
     zombie = CorpusLease(spark, path, ttl_s=0.2)
     os.makedirs(path, exist_ok=True)
     zombie.acquire()
@@ -147,8 +146,8 @@ def test_lost_lease_aborts_txn_before_commit(spark):
     usurper.release()
 
 
-def test_lost_lease_aborts_plain_append(spark):
-    path = _corpus_dir()
+def test_lost_lease_aborts_plain_append(spark, tmp_path):
+    path = _corpus_dir(tmp_path)
     os.makedirs(path, exist_ok=True)
     zombie = CorpusLease(spark, path, ttl_s=0.2).acquire()
     time.sleep(0.5)
@@ -158,9 +157,9 @@ def test_lost_lease_aborts_plain_append(spark):
     usurper.release()
 
 
-def test_maintenance_ops_under_lease(spark):
+def test_maintenance_ops_under_lease(spark, tmp_path):
     """compact / delete / recover all accept and verify the lease."""
-    path = _corpus_dir()
+    path = _corpus_dir(tmp_path)
     with corpus_lease(spark, path) as lease:
         append_corpus_txn(
             _docs(spark), path, 1, max_records_per_file=10, lease=lease
@@ -176,10 +175,10 @@ def test_maintenance_ops_under_lease(spark):
         assert got.count() > 0
 
 
-def test_unleased_ops_unaffected(spark):
+def test_unleased_ops_unaffected(spark, tmp_path):
     """lease=None keeps the pre-lease behavior byte-for-byte — no marker
     file, no checks."""
-    path = _corpus_dir()
+    path = _corpus_dir(tmp_path)
     append_corpus_txn(_docs(spark), path, 1)
     assert not os.path.exists(os.path.join(path, LEASE_NAME))
     compact_corpus(spark, path)
@@ -248,11 +247,11 @@ def test_create_failure_is_not_contention(spark, tmp_path):
     assert not isinstance(ei.value, CorpusLeaseHeld)
 
 
-def test_takeover_restores_fresh_lease(spark):
+def test_takeover_restores_fresh_lease(spark, tmp_path):
     """The two-racing-takeovers hazard: a takeover that judged the OLD
     doc stale must not delete a FRESH lease that replaced it in the
     meantime — the rename-aside re-judges and restores it."""
-    path = _corpus_dir()
+    path = _corpus_dir(tmp_path)
     os.makedirs(path, exist_ok=True)
     lf = os.path.join(path, LEASE_NAME)
     with open(lf, "w") as f:  # the stale doc both racers read
@@ -277,8 +276,8 @@ def glob_leftovers(path):
     return _g.glob(os.path.join(path, LEASE_NAME + ".takeover-*"))
 
 
-def test_takeover_removes_genuinely_stale(spark):
-    path = _corpus_dir()
+def test_takeover_removes_genuinely_stale(spark, tmp_path):
+    path = _corpus_dir(tmp_path)
     os.makedirs(path, exist_ok=True)
     lf = os.path.join(path, LEASE_NAME)
     with open(lf, "w") as f:
@@ -307,13 +306,13 @@ def test_recover_staging_lost_lease_aborts(spark, tmp_path):
     usurper.release()
 
 
-def test_lost_lease_blocks_schema_record(spark):
+def test_lost_lease_blocks_schema_record(spark, tmp_path):
     """The plain append's publish includes _record_schema (a manifest
     read-modify-write) — a zombie must abort before it, leaving the
     recorded schema untouched."""
     from bambooai_spark.operators.writer import _load_manifest_doc
 
-    path = _corpus_dir()
+    path = _corpus_dir(tmp_path)
     append_corpus(_docs(spark), path)
     before = _load_manifest_doc(spark, path).get("schema")
     zombie = CorpusLease(spark, path, ttl_s=0.2).acquire()
