@@ -13,7 +13,9 @@ Contract parity with the reference's ``CodeExecutor._execute_local``:
   (code_executor.py:103); Spark DataFrames are immutable lineage, so rollback
   is keeping the old reference — zero cost at any scale;
 - generated datasets: code may write files under ``generated_datasets_path``;
-  they're harvested into the result.
+  they're harvested into the result. The directories ``execute`` had to
+  create for that path are removed again when the run leaves them empty,
+  so a run that writes nothing leaves nothing behind.
 
 Versioned views: each successful commit also registers ``df_v{n}`` so earlier
 states stay addressable (the reference's single-slot cache can't do this).
@@ -148,7 +150,12 @@ class SparkCodeExecutor:
         if self.sanitize_code:
             code = sanitize(code)
 
+        made: list[str] = []  # directories created here, deepest first
         if generated_datasets_path:
+            d = os.path.abspath(generated_datasets_path)
+            while not os.path.exists(d):
+                made.append(d)
+                d = os.path.dirname(d)
             os.makedirs(generated_datasets_path, exist_ok=True)
 
         local_vars: dict = {
@@ -222,6 +229,11 @@ class SparkCodeExecutor:
             self._job_group = None
             plot_cap.close()
             buf.close()
+            for d in made:
+                try:
+                    os.rmdir(d)
+                except OSError:
+                    break  # holds files, and so do its parents
 
     def cancel(self) -> bool:
         """Cancel the Spark jobs of the in-flight execution (callable from
@@ -249,11 +261,6 @@ class SparkCodeExecutor:
         if generated_datasets_path and os.path.isdir(generated_datasets_path):
             for root, _dirs, files in os.walk(generated_datasets_path):
                 datasets += [os.path.join(root, f) for f in sorted(files)]
-            if not datasets:
-                try:
-                    os.rmdir(generated_datasets_path)
-                except OSError:
-                    pass
         return ExecutionResult(
             df=result_df,
             stdout=stdout,

@@ -30,6 +30,7 @@ from bambooai_spark.functions.text import (
 from bambooai_spark.caching import track, untrack
 from bambooai_spark.functions.vectors import dot
 from bambooai_spark.numeric import col_of
+from bambooai_spark.session import overlapped
 
 
 def exact_dedup(
@@ -1697,25 +1698,10 @@ def exact_substring_spans(
         # BOTH freshness branches below need df's row count (the as-is
         # branch checks it against the store's n_rows; the composed
         # branch checks n_rows + delta rows), so the count job rides a
-        # pool thread under the inventory read + inputFiles listing
-        # instead of serializing after them (guide §2.6)
-        from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
-
-        pool = ThreadPoolExecutor(max_workers=1)
-        fcount = pool.submit(df.count)
-
-        def _drain_count() -> None:
-            # consume the speculative count before raising staleness
-            # (ADVICE r13): otherwise the cluster job runs to completion
-            # for nothing and any exception it raised is silently
-            # dropped in the pool thread
-            fcount.cancel()
-            try:
-                fcount.result()
-            except Exception:
-                pass
-
-        try:
+        # side leg under the inventory read + inputFiles listing instead
+        # of serializing after them; a stale-store raise cancels it
+        with overlapped(df.sparkSession, "exact_substring_spans") as ov:
+            fcount = ov.submit(df.count)
             inv = (
                 _read_file_inventory(df.sparkSession, gram_store_path)
                 if smeta.get("has_files")
@@ -1725,9 +1711,19 @@ def exact_substring_spans(
                 cur = set(df.inputFiles())
             except Exception:
                 cur = set()
-        finally:
-            pool.shutdown(wait=False)
-        if inv is not None and cur and inv < cur and compose_delta:
+            grew = inv is not None and cur and inv < cur and compose_delta
+            if not grew and inv is not None and cur and inv != cur:
+                raise ValueError(
+                    f"gram store at {gram_store_path} is stale: its "
+                    "file inventory does not match the relation's scan "
+                    "files (files were rewritten, deleted, or moved — "
+                    "or compose_delta=False over appended files); "
+                    "refresh_gram_store (full) first. File identity is "
+                    "the exact signal: an in-place rewrite preserves "
+                    "the row count (ADVICE r12)"
+                )
+            n_now = fcount.result()
+        if grew:
             # the corpus GREW by appended files since the (exact) build:
             # compose stored counts with the delta files' counts —
             # output still equals the from-scratch computation, at
@@ -1742,7 +1738,7 @@ def exact_substring_spans(
                 min_count=min_count, text_col=text_col,
                 id_col=id_col if keep_first else None,
                 force=compose_delta == "force",
-                n_df=fcount.result(),
+                n_df=n_now,
             )
             if dup_grams is not None:
                 # materialize the composed union and broadcast-hint it
@@ -1762,18 +1758,6 @@ def exact_substring_spans(
                 if n_dup * _gram_row_bytes(k, dup_grams) <= 64 * 1024 * 1024:
                     dup_grams = F.broadcast(dup_grams)
         else:
-            if inv is not None and cur and inv != cur:
-                _drain_count()
-                raise ValueError(
-                    f"gram store at {gram_store_path} is stale: its "
-                    "file inventory does not match the relation's scan "
-                    "files (files were rewritten, deleted, or moved — "
-                    "or compose_delta=False over appended files); "
-                    "refresh_gram_store (full) first. File identity is "
-                    "the exact signal: an in-place rewrite preserves "
-                    "the row count (ADVICE r12)"
-                )
-            n_now = fcount.result()
             if smeta.get("n_rows") != n_now:
                 raise ValueError(
                     f"gram store at {gram_store_path} is stale: built "

@@ -52,6 +52,8 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bambooai_spark.session import overlapped
+
 GRAMS_DIR = "grams"
 META_NAME = "_gram_store_meta.json"
 # the source-file inventory rides INSIDE the grams directory under an
@@ -572,8 +574,6 @@ def _stage_grams_relation(
             df, text_col, k=k, min_count=min_count, id_col=id_col
         ).write.mode("overwrite").parquet(out_dir)
         return None
-    from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
-
     from pyspark.sql import Observation  # noqa: PLC0415
 
     from bambooai_spark.operators.writer import _fs_delete  # noqa: PLC0415
@@ -602,9 +602,9 @@ def _stage_grams_relation(
     # the COMPOSE_COST_RATIO inputs ride the two writes as observe()
     # metrics (occ = sum over >= plus sum over <; below = rows of the <
     # side before its bucket distinct) instead of a third scan of the
-    # counts relation, and the two independent writes overlap on a
-    # 2-thread driver pool so the below side back-fills executors freed
-    # by the grams write's tail (guide §2.6)
+    # counts relation, and the two independent writes run as two
+    # overlapped side legs so the below side back-fills executors freed
+    # by the grams write's tail
     obs_ge = Observation()
     obs_lt = Observation()
 
@@ -642,8 +642,8 @@ def _stage_grams_relation(
             .parquet(below_tmp)
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fge, flt = pool.submit(_write_ge), pool.submit(_write_lt)
+    with overlapped(spark, "gram store staging", 2) as ov:
+        fge, flt = ov.submit(_write_ge), ov.submit(_write_lt)
         fge.result()
         flt.result()
     _rename_checked(spark, below_tmp, _join(out_dir, BELOW_SUBDIR))

@@ -25,6 +25,8 @@ import json
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bambooai_spark.session import overlapped
+
 MANIFEST_NAME = "_corpus_manifest.json"
 # underscore prefix → invisible to spark.read.parquet(corpus_path), so the
 # ledger can live inside the corpus directory without polluting reads
@@ -304,28 +306,33 @@ def _fs_list_data_files(spark: SparkSession, path: str) -> list[str]:
     return out
 
 
-def _fs_parallel(fn, items, *, max_workers: int = 8) -> None:
+def _fs_parallel(spark: SparkSession, fn, items) -> None:
     """Run independent per-file bookkeeping calls (rename/exists/delete)
-    through a small driver thread pool. Each call is a blocking py4j
+    on up to 8 overlapped driver threads. Each call is a blocking py4j
     roundtrip of ~1 ms locally — and tens to hundreds of ms per rename
     on an object store — so a swap of F files costs O(F) sequential
     latency unless overlapped; the operations themselves are mutually
     independent by protocol design (per-file, order-free, resumable).
-    The first exception propagates after all submitted calls drain,
-    matching the sequential loop's fail-a-commit behavior."""
+    Each thread runs one side leg over every 8th item rather than one
+    leg per item: starting a leg costs about 1.4 ms of CPU in py4j
+    calls (measured at local[4] on a 4-vCPU host), more than the call
+    it would carry. The first failing leg's exception propagates after
+    the other legs have finished their items."""
     items = list(items)
     if not items:
         return
-    if len(items) == 1:  # no pool for the single-file common case
+    if len(items) == 1:  # no threads for the single-file common case
         fn(items[0])
         return
-    from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
+    n = min(8, len(items))
 
-    with ThreadPoolExecutor(
-        max_workers=min(max_workers, len(items))
-    ) as pool:
-        for _ in pool.map(fn, items):
-            pass  # pool.map re-raises the first exception in order
+    def _each(part):
+        for item in part:
+            fn(item)
+
+    with overlapped(spark, "corpus file ops", n) as ov:
+        for leg in [ov.submit(_each, items[i::n]) for i in range(n)]:
+            leg.result()
 
 
 def _move_staged_files(
@@ -360,7 +367,7 @@ def _move_staged_files(
         dest_dir = _join(dest_root, parent) if parent else dest_root
         moves.append((f, dest_dir, _join(dest_dir, f"{pre}{base}")))
     # each unique destination directory once, then the per-file renames
-    # through the shared bounded pool — semantics per file are unchanged
+    # on overlapped driver threads — semantics per file are unchanged
     # (existing destination wins), only the gateway latency is overlapped
     path_cls = spark._bbai_fs_cache["Path"]
     for d in sorted({dest_dir for _, dest_dir, _ in moves}):
@@ -374,7 +381,7 @@ def _move_staged_files(
         if not fs.rename(path_cls(f), dest_jpath):
             raise RuntimeError(f"rename failed: {f} -> {dest}")
 
-    _fs_parallel(_move_one, moves)
+    _fs_parallel(spark, _move_one, moves)
 
 
 def _txn_batch_of(basename: str) -> str | None:
@@ -538,6 +545,7 @@ def _unhide_swapped(spark: SparkSession, dest_root: str, hidden_prefix: str) -> 
             raise RuntimeError(f"swap unhide failed: {f}")
 
     _fs_parallel(
+        spark,
         _unhide_one,
         _walk_files(spark, dest_root, want_hidden_prefix=hidden_prefix),
     )
@@ -1091,32 +1099,30 @@ def append_corpus(
     before = set(_walk_files(spark, path)) if stats_cols else set()
 
     # the per-partition manifest delta reads only the checkpointed batch,
-    # so it rides a pool thread under the data + ledger writes instead of
-    # serializing after them (guide §2.6) — resolved before the manifest
-    # fold below, so a delta failure still fails the append first. The
+    # so it rides a side leg under the data + ledger writes instead of
+    # serializing after them — resolved before the manifest fold below,
+    # so a delta failure still fails the append first. The
     # corpus-then-ledger WRITE order itself stays serial deliberately:
     # it is what bounds a crash to a duplicate window, not a loss window.
-    fdelta = None
-    if not full_manifest:
-        from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
-
-        _pool = ThreadPoolExecutor(max_workers=1)
-        fdelta = _pool.submit(_collect_delta, batch, partition_by, token_col)
-        _pool.shutdown(wait=False)
-
-    writer = batch.drop("_fp").write.mode("append")
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer = apply_bloom_options(writer, bloom_config(spark, path))
-    writer.partitionBy(*partition_by).parquet(path)
-    batch.select(F.col("_fp").alias("fp")).write.mode("append").parquet(
-        _join(path, LEDGER_DIR)
-    )
-
-    if stats_cols:
-        _append_stats_delta(
-            spark, path, stats_cols, before, batch.drop("_fp").schema
+    with overlapped(spark, "append_corpus") as ov:
+        fdelta = (
+            None if full_manifest
+            else ov.submit(_collect_delta, batch, partition_by, token_col)
         )
+        writer = batch.drop("_fp").write.mode("append")
+        if max_records_per_file:
+            writer = writer.option("maxRecordsPerFile", max_records_per_file)
+        writer = apply_bloom_options(writer, bloom_config(spark, path))
+        writer.partitionBy(*partition_by).parquet(path)
+        batch.select(F.col("_fp").alias("fp")).write.mode("append").parquet(
+            _join(path, LEDGER_DIR)
+        )
+
+        if stats_cols:
+            _append_stats_delta(
+                spark, path, stats_cols, before, batch.drop("_fp").schema
+            )
+        delta = None if fdelta is None else fdelta.result()
 
     if full_manifest:
         from pyspark.sql.types import StructType  # noqa: PLC0415
@@ -1149,7 +1155,6 @@ def append_corpus(
         _record_sigs_last(fp_sigs, path, near_dup_opts)
         return manifest
 
-    delta = fdelta.result()
     rows = _merge_manifest_delta(
         spark, path, partition_by, delta, token_col,
         columns=sorted(new_docs.columns),
@@ -1598,8 +1603,6 @@ def append_corpus_txn(
     writer = batch.drop("_fp").write.mode("overwrite")
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
-
     from bambooai_spark.operators.filestats import (  # noqa: PLC0415
         apply_bloom_options,
         bloom_config,
@@ -1610,16 +1613,16 @@ def append_corpus_txn(
     # the ledger staging write is independent of the corpus staging
     # write (both read the checkpointed batch, land in disjoint staging
     # subdirs, and nothing is visible until the _STAGED freeze below),
-    # so it overlaps the corpus write + the staged-file read-backs on a
-    # 2-thread driver pool (guide §2.6). Joined BEFORE the freeze: the
-    # marker must only ever describe a fully staged attempt.
+    # so it rides a side leg under the corpus write + the staged-file
+    # read-backs. Joined BEFORE the freeze: the marker must only ever
+    # describe a fully staged attempt.
     def _write_ledger():
         batch.select(F.col("_fp").alias("fp")).write.mode(
             "overwrite"
         ).parquet(_join(stage, "ledger"))
 
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fledger = pool.submit(_write_ledger)
+    with overlapped(spark, "append_corpus_txn") as ov:
+        fledger = ov.submit(_write_ledger)
         writer.partitionBy(*partition_by).parquet(_join(stage, "corpus"))
         from bambooai_spark.operators.filestats import (  # noqa: PLC0415
             stats_config,
@@ -2720,7 +2723,6 @@ def _stage_update(
     matches = tagged.filter(hit).persist()
     inserts = None
     deletes = None
-    pool = None
     if delete_unmatched:
         if updates is None:
             raise ValueError(
@@ -2748,288 +2750,289 @@ def _stage_update(
     try:
         # the affected-file list (which also materializes the matches
         # cache) and the MERGE insert-admission job below are
-        # independent reads, so the file list rides a pool thread while
-        # the admission anti-joins run (guide §2.6); resolved before
-        # its first use at the no-match short-circuit. On the non-merge
-        # verbs nothing runs in between and the submit degrades to a
-        # serial collect.
-        from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
+        # independent reads, so the file list rides a side leg while
+        # the admission anti-joins run; resolved before its first use
+        # at the no-match short-circuit. On the non-merge verbs nothing
+        # runs in between and the submit degrades to a serial collect.
+        phase = (
+            "merge_corpus" if insert_unmatched
+            else "update_corpus_from" if updates is not None
+            else "update_corpus"
+        )
+        with overlapped(spark, phase, 3) as ov:
+            if delete_unmatched:
+                # every row is matched-updated or unmatched-deleted, so
+                # every file holding a row is affected — snapshot sync
+                # rewrites the corpus by construction; the file list comes
+                # from every row, the delta from the matches alone
+                files_rel = tagged.select("_file").distinct()
 
-        pool = ThreadPoolExecutor(max_workers=3)
-        if delete_unmatched:
-            # every row is matched-updated or unmatched-deleted, so
-            # every file holding a row is affected — snapshot sync
-            # rewrites the corpus by construction; the file list comes
-            # from every row, the delta from the matches alone
-            files_rel = tagged.select("_file").distinct()
-            ffiles = pool.submit(
-                lambda: (
-                    sorted(r["_file"] for r in files_rel.collect()), None
+                def _every_file():
+                    files = sorted(r["_file"] for r in files_rel.collect())
+                    return files, None
+
+                ffiles = ov.submit(_every_file)
+            else:
+                # one aggregate over the matches gives both the file list
+                # and the delta
+                files_rel = matches.select("_file").distinct()
+                ffiles = ov.submit(
+                    _files_and_delta, matches, partition_by, aggs
                 )
+            fpc = None
+            old_fps = new_fps = None
+            if text_changes:
+                fpc = fingerprint(text_col, normalize=True)
+            n_ins = 0
+            ledger_path = _join(path, LEDGER_DIR)
+            has_ledger = _fs_exists(spark, ledger_path)
+            del_fps = None
+            if (
+                deletes is not None
+                and has_ledger
+                and text_col in df.columns
+            ):
+                del_fps = deletes.select(
+                    fingerprint(text_col, normalize=True).alias("fp")
+                ).distinct()
+            if insert_unmatched:
+                cand = u_full.join(
+                    df.select(key_col).distinct(), key_col, "left_anti"
+                )
+                if has_ledger and text_col in df.columns:
+                    # admission mirrors append_corpus_txn: the corpus keeps
+                    # one LIVE row per text fingerprint, so an insert whose
+                    # fp is already live (and not leaving via this very
+                    # update), or equals an updated row's NEW text, or
+                    # repeats an earlier-keyed insert's text, is dropped
+                    ifp = fingerprint(text_col, normalize=True)
+                    lfps = _read_ledger(spark, ledger_path)
+                    if del_fps is not None and lfps is not None:
+                        # rows leaving via the delete clause free their
+                        # fingerprints: an insert may legitimately carry a
+                        # deleted row's content. Subtract from the LEDGER-
+                        # derived fps only, BEFORE the updated rows' new
+                        # texts are unioned in — a deleted row whose fp
+                        # equals an updated row's NEW text must not free
+                        # that fp, or the insert admission would let a
+                        # second live row duplicate the updated text
+                        # (ADVICE r11)
+                        lfps = lfps.join(del_fps, "fp", "left_anti")
+                    if text_changes:
+                        old_fps = matches.select(fpc.alias("fp")).distinct()
+                        new_fps = matches.select(
+                            fingerprint(
+                                new_vals[text_col], normalize=True
+                            ).alias("fp")
+                        ).distinct()
+                        if lfps is not None:
+                            lfps = lfps.join(old_fps, "fp", "left_anti")
+                        lfps = (
+                            new_fps if lfps is None
+                            else lfps.unionByName(new_fps)
+                        )
+                    cand = cand.withColumn("_fp", ifp)
+                    if lfps is not None:
+                        cand = cand.join(
+                            lfps.withColumnRenamed("fp", "_fp"),
+                            "_fp", "left_anti",
+                        )
+                    wfp = Window.partitionBy("_fp").orderBy(key_col)
+                    cand = (
+                        cand.withColumn(
+                            "_rk", F.row_number().over(wfp)
+                        ).filter(F.col("_rk") == 1).drop("_rk")
+                    )
+                inserts = cand.persist()
+                # ONE job both materializes the persisted inserts and
+                # collects their per-partition manifest delta; n_ins is the
+                # delta's row-count sum — the former separate .count() was
+                # a second full pass over the same cached relation
+                iaggs = [F.count(F.lit(1)).cast("long").alias("n_rows")]
+                if token_col:
+                    iaggs.append(
+                        F.coalesce(F.sum(F.col(token_col)), F.lit(0))
+                        .cast("long").alias("n_tokens")
+                    )
+                ins_delta = [
+                    r.asDict()
+                    for r in inserts.groupBy(*partition_by)
+                    .agg(*iaggs).collect()
+                ]
+                n_ins = sum(r["n_rows"] for r in ins_delta)
+            data_files, delta = ffiles.result()
+            if not data_files and not n_ins:
+                return None
+            if delta is None:
+                delta = [
+                    r.asDict()
+                    for r in matches.groupBy(*partition_by)
+                    .agg(*aggs).collect()
+                ]
+            if n_ins:
+                delta = _combine_deltas(delta, ins_delta, partition_by)
+            if deletes is not None:
+                daggs = [(-F.count(F.lit(1))).cast("long").alias("n_rows")]
+                if token_col:
+                    daggs.append(
+                        (-F.coalesce(F.sum(F.col(token_col)), F.lit(0)))
+                        .cast("long").alias("n_tokens")
+                    )
+                delta = _combine_deltas(
+                    delta,
+                    [
+                        r.asDict()
+                        for r in deletes.groupBy(*partition_by)
+                        .agg(*daggs).collect()
+                    ],
+                    partition_by,
+                )
+            # ONE projection applies every assignment against the OLD row —
+            # simultaneous semantics, and the predicate is evaluated before
+            # any value changes
+            kept_src = _filter_to_files(tagged, files_rel, data_files)
+            if delete_unmatched:
+                kept_src = kept_src.filter(hit)
+            rewritten = kept_src.select(
+                *[
+                    (
+                        F.when(hit, new_vals[c]).otherwise(F.col(c)).alias(c)
+                        if c in new_vals
+                        else F.col(c)
+                    )
+                    for c in df.columns
+                ]
             )
-        else:
-            # one aggregate over the matches gives both the file list
-            # and the delta
-            files_rel = matches.select("_file").distinct()
-            ffiles = pool.submit(
-                _files_and_delta, matches, partition_by, aggs
+            from bambooai_spark.operators.filestats import (  # noqa: PLC0415
+                apply_bloom_options,
+                bloom_config,
+                collect_file_stats,
+                stats_config,
             )
-        fpc = None
-        old_fps = new_fps = None
-        if text_changes:
-            fpc = fingerprint(text_col, normalize=True)
-        n_ins = 0
-        ledger_path = _join(path, LEDGER_DIR)
-        has_ledger = _fs_exists(spark, ledger_path)
-        del_fps = None
-        if (
-            deletes is not None
-            and has_ledger
-            and text_col in df.columns
-        ):
-            del_fps = deletes.select(
-                fingerprint(text_col, normalize=True).alias("fp")
-            ).distinct()
-        if insert_unmatched:
-            cand = u_full.join(
-                df.select(key_col).distinct(), key_col, "left_anti"
+
+            body = rewritten
+            if n_ins:
+                body = rewritten.unionByName(inserts.select(*df.columns))
+            stats_cols = stats_config(spark, path)
+
+            # the rewritten-data write (+ its staged stats scan) and the
+            # ledger-replacement block below are independent staged
+            # outputs (disjoint tmp subdirs; both read only the persisted
+            # matches/inserts caches and on-disk files), so the data side
+            # rides a side leg while the ledger side runs — joined before
+            # the freeze info is assembled, and a failure on either side
+            # raises before Phase B exactly as the serial order did
+            def _write_data():
+                apply_bloom_options(
+                    body.write.mode("overwrite"), bloom_config(spark, path)
+                ).partitionBy(*partition_by).parquet(_join(tmp, "data"))
+                if not stats_cols:
+                    return None
+                return collect_file_stats(
+                    spark, _join(tmp, "data"), stats_cols,
+                    schema=df.schema, key_prefix=f"d{update_id}-",
+                )
+
+            fdata = ov.submit(_write_data)
+            fdup = None
+            ledger_files: list[str] = []
+            ledger_new = False
+            ins_fps = (
+                inserts.select(F.col("_fp").alias("fp")).distinct()
+                if n_ins and "_fp" in (inserts.columns if inserts else [])
+                else None
             )
-            if has_ledger and text_col in df.columns:
-                # admission mirrors append_corpus_txn: the corpus keeps
-                # one LIVE row per text fingerprint, so an insert whose
-                # fp is already live (and not leaving via this very
-                # update), or equals an updated row's NEW text, or
-                # repeats an earlier-keyed insert's text, is dropped
-                ifp = fingerprint(text_col, normalize=True)
-                lfps = _read_ledger(spark, ledger_path)
-                if del_fps is not None and lfps is not None:
-                    # rows leaving via the delete clause free their
-                    # fingerprints: an insert may legitimately carry a
-                    # deleted row's content. Subtract from the LEDGER-
-                    # derived fps only, BEFORE the updated rows' new
-                    # texts are unioned in — a deleted row whose fp
-                    # equals an updated row's NEW text must not free
-                    # that fp, or the insert admission would let a
-                    # second live row duplicate the updated text
-                    # (ADVICE r11)
-                    lfps = lfps.join(del_fps, "fp", "left_anti")
-                if text_changes:
+            if (
+                text_changes or ins_fps is not None or del_fps is not None
+            ) and has_ledger:
+                if text_changes and old_fps is None:
                     old_fps = matches.select(fpc.alias("fp")).distinct()
                     new_fps = matches.select(
                         fingerprint(
                             new_vals[text_col], normalize=True
                         ).alias("fp")
                     ).distinct()
-                    if lfps is not None:
-                        lfps = lfps.join(old_fps, "fp", "left_anti")
-                    lfps = (
-                        new_fps if lfps is None
-                        else lfps.unionByName(new_fps)
+                # the removal set: updated rows' OLD texts plus (snapshot
+                # sync) deleted rows' texts — both legitimately re-appendable
+                leaving = old_fps
+                if del_fps is not None:
+                    leaving = (
+                        del_fps if leaving is None
+                        else leaving.unionByName(del_fps)
                     )
-                cand = cand.withColumn("_fp", ifp)
-                if lfps is not None:
-                    cand = cand.join(
-                        lfps.withColumnRenamed("fp", "_fp"),
-                        "_fp", "left_anti",
+                ledger = _read_ledger(spark, ledger_path)
+                if ledger is not None:
+                    ledger = ledger.withColumn(
+                        "_file", F.col("_metadata.file_path")
                     )
-                wfp = Window.partitionBy("_fp").orderBy(key_col)
-                cand = (
-                    cand.withColumn(
-                        "_rk", F.row_number().over(wfp)
-                    ).filter(F.col("_rk") == 1).drop("_rk")
-                )
-            inserts = cand.persist()
-            # ONE job both materializes the persisted inserts and
-            # collects their per-partition manifest delta; n_ins is the
-            # delta's row-count sum — the former separate .count() was
-            # a second full pass over the same cached relation
-            iaggs = [F.count(F.lit(1)).cast("long").alias("n_rows")]
-            if token_col:
-                iaggs.append(
-                    F.coalesce(F.sum(F.col(token_col)), F.lit(0))
-                    .cast("long").alias("n_tokens")
-                )
-            ins_delta = [
-                r.asDict()
-                for r in inserts.groupBy(*partition_by)
-                .agg(*iaggs).collect()
-            ]
-            n_ins = sum(r["n_rows"] for r in ins_delta)
-        data_files, delta = ffiles.result()
-        if not data_files and not n_ins:
-            return None
-        if delta is None:
-            delta = [
-                r.asDict()
-                for r in matches.groupBy(*partition_by).agg(*aggs).collect()
-            ]
-        if n_ins:
-            delta = _combine_deltas(delta, ins_delta, partition_by)
-        if deletes is not None:
-            daggs = [(-F.count(F.lit(1))).cast("long").alias("n_rows")]
-            if token_col:
-                daggs.append(
-                    (-F.coalesce(F.sum(F.col(token_col)), F.lit(0)))
-                    .cast("long").alias("n_tokens")
-                )
-            delta = _combine_deltas(
-                delta,
-                [
-                    r.asDict()
-                    for r in deletes.groupBy(*partition_by)
-                    .agg(*daggs).collect()
-                ],
-                partition_by,
-            )
-        # ONE projection applies every assignment against the OLD row —
-        # simultaneous semantics, and the predicate is evaluated before
-        # any value changes
-        kept_src = _filter_to_files(tagged, files_rel, data_files)
-        if delete_unmatched:
-            kept_src = kept_src.filter(hit)
-        rewritten = kept_src.select(
-            *[
-                (
-                    F.when(hit, new_vals[c]).otherwise(F.col(c)).alias(c)
-                    if c in new_vals
-                    else F.col(c)
-                )
-                for c in df.columns
-            ]
-        )
-        from bambooai_spark.operators.filestats import (  # noqa: PLC0415
-            apply_bloom_options,
-            bloom_config,
-            collect_file_stats,
-            stats_config,
-        )
-
-        body = rewritten
-        if n_ins:
-            body = rewritten.unionByName(inserts.select(*df.columns))
-        stats_cols = stats_config(spark, path)
-
-        # the rewritten-data write (+ its staged stats scan) and the
-        # ledger-replacement block below are independent staged outputs
-        # (disjoint tmp subdirs; both read only the persisted
-        # matches/inserts caches and on-disk files), so the data side
-        # rides a pool thread while the ledger side runs (guide §2.6) —
-        # joined before the freeze info is assembled, and a failure on
-        # either side raises before Phase B exactly as the serial order
-        # did
-        def _write_data():
-            apply_bloom_options(
-                body.write.mode("overwrite"), bloom_config(spark, path)
-            ).partitionBy(*partition_by).parquet(_join(tmp, "data"))
-            if not stats_cols:
-                return None
-            return collect_file_stats(
-                spark, _join(tmp, "data"), stats_cols,
-                schema=df.schema, key_prefix=f"d{update_id}-",
-            )
-
-        fdata = pool.submit(_write_data)
-        fdup = None
-        ledger_files: list[str] = []
-        ledger_new = False
-        ins_fps = (
-            inserts.select(F.col("_fp").alias("fp")).distinct()
-            if n_ins and "_fp" in (inserts.columns if inserts else [])
-            else None
-        )
-        if (
-            text_changes or ins_fps is not None or del_fps is not None
-        ) and has_ledger:
-            if text_changes and old_fps is None:
-                old_fps = matches.select(fpc.alias("fp")).distinct()
-                new_fps = matches.select(
-                    fingerprint(
-                        new_vals[text_col], normalize=True
-                    ).alias("fp")
-                ).distinct()
-            # the removal set: updated rows' OLD texts plus (snapshot
-            # sync) deleted rows' texts — both legitimately re-appendable
-            leaving = old_fps
-            if del_fps is not None:
-                leaving = (
-                    del_fps if leaving is None
-                    else leaving.unionByName(del_fps)
-                )
-            ledger = _read_ledger(spark, ledger_path)
-            if ledger is not None:
-                ledger = ledger.withColumn(
-                    "_file", F.col("_metadata.file_path")
-                )
-            parts = []
-            if ledger is not None and leaving is not None:
-                lf_rel = (
-                    ledger.join(leaving, "fp", "left_semi")
-                    .select("_file").distinct()
-                )
-                ledger_files = sorted(
-                    r["_file"] for r in lf_rel.collect()
-                )
-                survivors = (
-                    _filter_to_files(ledger, lf_rel, ledger_files)
-                    .join(leaving, "fp", "left_anti")
-                    .drop("_file")
-                )
-                # new fps enter even when they also exist elsewhere in
-                # the ledger: distinct() against the full ledger would
-                # re-scan it; a duplicate fp row is harmless (the
-                # admission anti-join is set-semantics)
-                parts = [survivors]
-                if new_fps is not None:
-                    parts.append(new_fps)
-                # invariant check (one extra ledger-side join): an
-                # update that assigns a text already LIVE elsewhere
-                # creates a duplicate live document exact dedup would
-                # have dropped — warn, don't refuse (the caller may be
-                # deliberately normalizing near-identical rows before a
-                # dedup pass). Read-only over the ledger and the cached
-                # matches, independent of the replacement below, so it
-                # rides the pool alongside the data write instead of
-                # serializing a full-ledger job between the file-list
-                # collect and the ledger write (guide §2.6); resolved
-                # before the finally block releases the caches it reads.
-                if new_fps is not None:
-                    fdup = pool.submit(
-                        ledger.join(leaving, "fp", "left_anti")
-                        .join(new_fps, "fp", "left_semi")
-                        .count
+                parts = []
+                if ledger is not None and leaving is not None:
+                    lf_rel = (
+                        ledger.join(leaving, "fp", "left_semi")
+                        .select("_file").distinct()
                     )
-            elif new_fps is not None and ins_fps is not None:
-                # ledger dir exists but holds no readable files; the
-                # merge writes a ledger anyway for its inserts, so the
-                # updated texts' new fps ride along
-                parts = [new_fps]
-            if ins_fps is not None:
-                parts.append(ins_fps)
-            if parts:
-                replacement = parts[0]
-                for extra in parts[1:]:
-                    replacement = replacement.unionByName(extra)
-                replacement.write.mode("overwrite").parquet(
-                    _join(tmp, "ledger")
-                )
-                ledger_new = True
-        file_stats = fdata.result()
-        if fdup is not None and fdup.result():
-            import warnings  # noqa: PLC0415
+                    ledger_files = sorted(
+                        r["_file"] for r in lf_rel.collect()
+                    )
+                    survivors = (
+                        _filter_to_files(ledger, lf_rel, ledger_files)
+                        .join(leaving, "fp", "left_anti")
+                        .drop("_file")
+                    )
+                    # new fps enter even when they also exist elsewhere in
+                    # the ledger: distinct() against the full ledger would
+                    # re-scan it; a duplicate fp row is harmless (the
+                    # admission anti-join is set-semantics)
+                    parts = [survivors]
+                    if new_fps is not None:
+                        parts.append(new_fps)
+                    # invariant check (one extra ledger-side join): an
+                    # update that assigns a text already LIVE elsewhere
+                    # creates a duplicate live document exact dedup would
+                    # have dropped — warn, don't refuse (the caller may be
+                    # deliberately normalizing near-identical rows before a
+                    # dedup pass). Read-only over the ledger and the cached
+                    # matches, independent of the replacement below, so it
+                    # rides a side leg alongside the data write instead of
+                    # serializing a full-ledger job between the file-list
+                    # collect and the ledger write; resolved before the
+                    # finally block releases the caches it reads.
+                    if new_fps is not None:
+                        fdup = ov.submit(
+                            ledger.join(leaving, "fp", "left_anti")
+                            .join(new_fps, "fp", "left_semi")
+                            .count
+                        )
+                elif new_fps is not None and ins_fps is not None:
+                    # ledger dir exists but holds no readable files; the
+                    # merge writes a ledger anyway for its inserts, so the
+                    # updated texts' new fps ride along
+                    parts = [new_fps]
+                if ins_fps is not None:
+                    parts.append(ins_fps)
+                if parts:
+                    replacement = parts[0]
+                    for extra in parts[1:]:
+                        replacement = replacement.unionByName(extra)
+                    replacement.write.mode("overwrite").parquet(
+                        _join(tmp, "ledger")
+                    )
+                    ledger_new = True
+            file_stats = fdata.result()
+            if fdup is not None and fdup.result():
+                import warnings  # noqa: PLC0415
 
-            warnings.warn(
-                f"update assigns {fdup.result()} text value(s) that "
-                "are already live elsewhere in the corpus — the "
-                "one-live-row-per-fingerprint invariant is now broken "
-                "for those texts (a dedup pass or delete_from_corpus "
-                "can restore it)",
-                stacklevel=2,
-            )
+                warnings.warn(
+                    f"update assigns {fdup.result()} text value(s) that "
+                    "are already live elsewhere in the corpus — the "
+                    "one-live-row-per-fingerprint invariant is now broken "
+                    "for those texts (a dedup pass or delete_from_corpus "
+                    "can restore it)",
+                    stacklevel=2,
+                )
     finally:
-        # join the overlapped data write even when the ledger side
-        # raised: the caches below must not be released under it
-        if pool is not None:
-            pool.shutdown(wait=True)
+        # the with block has joined (or cancelled) every side leg by
+        # now, so no overlapped job still reads the caches released here
         matches.unpersist()
         if updates is not None:
             u.unpersist()
@@ -3178,8 +3181,6 @@ def _stage_delete(
         kept = _filter_to_files(tagged, files_rel, data_files).filter(
             ~F.coalesce(pred, F.lit(False))  # NULL predicate rows are kept
         ).drop("_file")
-        from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
-
         from bambooai_spark.operators.filestats import (  # noqa: PLC0415
             apply_bloom_options,
             bloom_config,
@@ -3191,10 +3192,10 @@ def _stage_delete(
 
         # the kept-rows rewrite (+ its staged stats scan) and the ledger
         # rewrite are independent staged outputs — disjoint tmp subdirs,
-        # both fed by the already-materialized `matches` cache — so they
-        # overlap on a 2-thread driver pool (guide §2.6); nothing outside
-        # tmp changes until Phase B, and a failure on either side raises
-        # before the freeze exactly as the serial order did
+        # both fed by the already-materialized `matches` cache — so the
+        # kept rows ride a side leg; nothing outside tmp changes until
+        # Phase B, and a failure on either side raises before the
+        # freeze exactly as the serial order did
         def _write_kept():
             apply_bloom_options(
                 kept.write.mode("overwrite"), bloom_config(spark, path)
@@ -3210,8 +3211,8 @@ def _stage_delete(
             )
 
         ledger_files: list[str] = []
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            fkept = pool.submit(_write_kept)
+        with overlapped(spark, "delete_from_corpus") as ov:
+            fkept = ov.submit(_write_kept)
             ledger_path = _join(path, LEDGER_DIR)
             if _fs_exists(spark, ledger_path):
                 # resolve the fingerprints OUTSIDE the empty-ledger
@@ -3299,11 +3300,13 @@ def _apply_staged_delete(
         )
         # (2) delete exactly the affected originals (missing = already
         # deleted by a previous attempt) — independent per file, so
-        # overlapped through the shared bookkeeping pool
+        # overlapped like the renames
         path_cls = spark._bbai_fs_cache["Path"]
-        _fs_parallel(
-            lambda f: fs.delete(path_cls(f), False), originals
-        )
+
+        def _delete_one(f):
+            fs.delete(path_cls(f), False)
+
+        _fs_parallel(spark, _delete_one, originals)
         # (3) unhide — the shared swap-protocol step
         _unhide_swapped(spark, dest_root, f"_swap-d{did}-")
     if info.get("file_stats"):

@@ -21,13 +21,20 @@ every default below is chosen for a multi-executor cluster:
   next cycle needs them and every cycle recompiles them all.
 - Core count defaults to the CPUs this process may run on
   (``SPARK_GRAFT_CPUS`` overrides), not a fixed cluster-sized number.
+
+:func:`overlapped` is the one way operators run Spark work on a side
+thread next to the caller's own (the main leg).
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
+import uuid
+from concurrent.futures import ThreadPoolExecutor, wait
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 # Runtime confs applied even to externally-provided sessions (the correctness
 # driver constructs its own SparkSession; these are all runtime-settable).
@@ -111,3 +118,108 @@ def get_session(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     return apply_runtime_confs(spark)
+
+
+class _Leg:
+    """A side leg's future; ``result()`` marks its outcome consumed."""
+
+    __slots__ = ("future", "consumed")
+
+    def __init__(self, future):
+        self.future = future
+        self.consumed = False
+
+    def result(self):
+        self.consumed = True
+        return self.future.result()
+
+
+class Overlap:
+    """The handle :func:`overlapped` yields: ``submit(fn, *args)`` starts
+    one side leg and returns its :class:`_Leg`. ``tag`` is the job tag
+    every side-leg job of this scope carries."""
+
+    def __init__(self, spark: SparkSession, phase: str, pool) -> None:
+        self.phase = phase
+        self.tag = f"bbai-overlap-{uuid.uuid4().hex}"
+        self.legs: list[_Leg] = []
+        self._spark = spark
+        self._pool = pool
+
+    def submit(self, fn, *args) -> _Leg:
+        # made per submit, here in the caller's thread: the wrapper clones
+        # the caller's local properties once and installs that one
+        # Properties object in whichever thread runs it, so a shared
+        # wrapper would share it across legs. It wraps a no-op and runs
+        # before fn, not around it, because PySpark names a job after the
+        # outermost pyspark frame on the stack: around fn, every side-leg
+        # job would be named after the wrapper instead of fn's own call.
+        inherit = inheritable_thread_target(self._spark)(lambda: None)
+        leg = _Leg(self._pool.submit(self._run, inherit, fn, args))
+        self.legs.append(leg)
+        return leg
+
+    def _run(self, inherit, fn, args):
+        inherit()
+        sc = self._spark.sparkContext
+        sc.setJobDescription(
+            f"{self.phase}: {getattr(fn, '__name__', type(fn).__name__)}"
+        )
+        sc.addJobTag(self.tag)
+        return fn(*args)
+
+
+@contextlib.contextmanager
+def overlapped(spark: SparkSession, phase: str, max_workers: int = 1):
+    """Run side legs of Spark work on ``max_workers`` driver threads while
+    the ``with`` body (the main leg) runs its own::
+
+        with overlapped(spark, "merge_corpus") as ov:
+            ffiles = ov.submit(_files_and_delta, matches, keys, aggs)
+            ...  # main-leg jobs
+            files, delta = ffiles.result()
+
+    Contract:
+
+    - **Inheritance.** Each leg runs with a copy of the local properties
+      the caller had at ``submit``: its job group (so
+      ``cancelJobGroup``, e.g. ``SparkCodeExecutor.cancel()``, reaches
+      side-leg jobs too), interrupt-on-cancel flag, scheduler pool and
+      session tags. A plain pool thread carries none of them in
+      pinned-thread mode.
+    - **Attribution.** Each leg's jobs carry the description
+      ``"<phase>: <leg function name>"`` and the scope's job tag
+      (``Overlap.tag``), so the status store names the phase of every
+      overlapped job.
+    - **Failing main leg.** If the body raises, queued legs are dropped,
+      running legs' jobs are cancelled by tag (re-issued until every leg
+      has returned, since a leg may start a job after a cancel), and
+      only then does the body's exception propagate; a side leg's own
+      error is discarded in its favour. Cancelling rather than waiting
+      is safe for every writer caller: side legs only write staged
+      outputs, which stay invisible until the freeze that the failed
+      main leg never reaches, and waiting would run a whole job for a
+      result nobody reads.
+    - **Normal exit.** Every leg is waited for, and the first side-leg
+      failure whose ``result()`` was never called is raised, so no
+      error is lost in a worker thread.
+    """
+    pool = ThreadPoolExecutor(max_workers=max_workers)
+    ov = Overlap(spark, phase, pool)
+    try:
+        yield ov
+    except BaseException:
+        for leg in ov.legs:
+            leg.future.cancel()  # not yet started: never starts
+        pending = {leg.future for leg in ov.legs}
+        while pending:
+            # the body's exception wins, even over a stopped context
+            with contextlib.suppress(Exception):
+                spark.sparkContext.cancelJobsWithTag(ov.tag)
+            _done, pending = wait(pending, timeout=0.25)
+        raise
+    finally:
+        pool.shutdown(wait=True)
+    for leg in ov.legs:
+        if not leg.consumed:
+            leg.result()

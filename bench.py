@@ -38,7 +38,7 @@ import sys
 import time
 
 from bambooai_spark.caching import release_caches
-from bambooai_spark.session import get_session
+from bambooai_spark.session import default_parallelism, get_session
 from bambooai_spark.suite import SPECS
 
 
@@ -238,7 +238,7 @@ def _final_line(result: dict) -> str:
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_parallelism()
     iters = int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "5"))
     rerun_iters = int(os.environ.get("SPARK_GRAFT_BENCH_RERUN_ITERS", "3"))
     spark = get_session("bambooai-spark-bench", cpus=cpus)

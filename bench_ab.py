@@ -28,6 +28,8 @@ import subprocess
 import sys
 import tempfile
 
+from bambooai_spark.session import default_parallelism
+
 REPO = os.path.dirname(os.path.abspath(__file__))
 
 _RUNNER = r"""
@@ -93,8 +95,7 @@ def main() -> int:
     ap.add_argument("--sf-dir",
                     default=os.environ.get("SPARK_GRAFT_SF_DIR",
                                            "/root/testdata/sf0.1"))
-    ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", 32)))
+    ap.add_argument("--cpus", type=int, default=default_parallelism())
     args = ap.parse_args()
     names = [n.strip() for n in args.queries.split(",") if n.strip()]
 

@@ -286,6 +286,137 @@ def test_executor_cancel_lifecycle(spark):
     assert out["res"].df is orders  # rollback intact
 
 
+# ---------------------------------------------------------------- overlapped
+# side legs (bambooai_spark.session.overlapped): attributable, cancellable,
+# drained on every exit
+
+
+def _job_data(spark, job_id):
+    return spark.sparkContext._jsc.sc().statusStore().job(job_id)
+
+
+def _wait_for(cond, timeout=30.0):
+    import time
+
+    deadline = time.time() + timeout
+    while not cond() and time.time() < deadline:
+        time.sleep(0.05)
+    return cond()
+
+
+def test_overlapped_leg_joins_exec_group_and_cancels(spark):
+    """A side leg started by generated code runs its job inside the
+    execution's job group, described by its phase, so cancel() stops it."""
+    import threading
+
+    from bambooai_spark.executor import SparkCodeExecutor
+
+    code = (
+        "from bambooai_spark.session import overlapped\n"
+        "big = spark.range(0, 1 << 40, numPartitions=8)\n"
+        "def slow_leg():\n"
+        "    return big.agg(F.sum(F.hash('id'))).limit(1).collect()\n"
+        "with overlapped(spark, 'probe phase') as ov:\n"
+        "    print(ov.submit(slow_leg).result())\n"
+    )
+    ex = SparkCodeExecutor()
+    sc = spark.sparkContext
+    out: dict = {}
+    t = threading.Thread(
+        target=lambda: out.setdefault("res", ex.execute(code, spark=spark))
+    )
+    t.start()
+    try:
+        group = {}
+
+        def leg_jobs():
+            group["id"] = group.get("id") or ex._job_group
+            return group["id"] and list(
+                sc.statusTracker().getJobIdsForGroup(group["id"])
+            )
+
+        jobs = _wait_for(leg_jobs)
+        assert jobs, "the side leg's job is not in the execution's group"
+        for j in jobs:
+            desc = _job_data(spark, j).description()
+            assert desc.isDefined() and desc.get() == "probe phase: slow_leg"
+
+        def cancelled():
+            ex.cancel()  # re-issued until the execution returns
+            return not t.is_alive()
+
+        assert _wait_for(cancelled), "cancel() failed to stop the side leg"
+        assert not out["res"].ok
+    finally:
+        if t.is_alive():  # never leave the slow job grinding
+            sc.cancelAllJobs()
+            t.join(timeout=30)
+
+
+def test_overlapped_failing_main_leg_cancels_side_leg(spark):
+    """The main leg raises while a side leg's job runs: the with block is
+    left within seconds (the job is cancelled by the scope's tag, not run
+    to completion) and the main leg's exception is the one raised."""
+    import threading
+    import time
+
+    from bambooai_spark.session import overlapped
+
+    sc = spark.sparkContext
+    big = spark.range(0, 1 << 40, numPartitions=8)
+
+    def slow_leg():
+        return big.agg(F.sum(F.hash("id"))).collect()
+
+    out: dict = {}
+
+    def main_leg():
+        try:
+            with overlapped(spark, "error path") as ov:
+                ov.submit(slow_leg)
+                assert _wait_for(
+                    lambda: sc.statusTracker().getActiveJobsIds()
+                )
+                (job,) = sc.statusTracker().getActiveJobsIds()
+                assert _job_data(spark, job).jobTags().contains(ov.tag)
+                out["raised_at"] = time.time()
+                raise RuntimeError("main leg failed")
+        except BaseException as e:  # noqa: BLE001 - inspected below
+            out["left_at"] = time.time()
+            out["exc"] = e
+
+    t = threading.Thread(target=main_leg)
+    t.start()
+    t.join(timeout=60)
+    try:
+        assert not t.is_alive(), "the with block waited for its side leg"
+    finally:
+        if t.is_alive():  # never leave the slow job grinding
+            sc.cancelAllJobs()
+            t.join(timeout=30)
+    assert isinstance(out["exc"], RuntimeError), out["exc"]
+    assert str(out["exc"]) == "main leg failed"
+    assert out["left_at"] - out["raised_at"] < 10
+    assert not sc.statusTracker().getActiveJobsIds()
+
+
+def test_overlapped_raises_unconsumed_side_failure(spark):
+    """A side-leg failure nobody read is raised when the block exits; one
+    the main leg already consumed is not raised a second time."""
+    from bambooai_spark.session import overlapped
+
+    def bad_leg():
+        raise ValueError("side leg failed")
+
+    with pytest.raises(ValueError, match="side leg failed"):
+        with overlapped(spark, "unconsumed") as ov:
+            ov.submit(bad_leg)
+    with overlapped(spark, "consumed") as ov:
+        leg = ov.submit(bad_leg)
+        with pytest.raises(ValueError, match="side leg failed"):
+            leg.result()
+
+
 # ---------------------------------------------------------------- episodic memory
 # (reference bambooai.py:265-291 retrieve-before-plan + :655-670 rank-gated
 # writes — EpisodicMemory over the same Spark operators as the graded specs)

@@ -105,6 +105,35 @@ def test_generated_datasets_harvest(spark, orders, tmp_path):
     assert any(p.endswith(".parquet") for p in res.generated_datasets)
 
 
+def test_generated_datasets_dirs_removed_when_empty(
+    spark, orders, tmp_path, monkeypatch
+):
+    """The facade's relative ``datasets/generated/<thread>`` path: a run
+    that writes nothing leaves no ``datasets/`` in the working directory,
+    a run that writes a file keeps it, and a directory that existed before
+    the run is never removed."""
+    monkeypatch.chdir(tmp_path)
+    gen = os.path.join("datasets", "generated", "t1")
+    ex = SparkCodeExecutor()
+    assert ex.execute("x = 1", df=orders, generated_datasets_path=gen).ok
+    assert not os.path.exists("datasets")
+    bad = ex.execute("raise ValueError('no')", df=orders,
+                     generated_datasets_path=gen)
+    assert not bad.ok and not os.path.exists("datasets")
+
+    code = (
+        "open(_generated_datasets_path + '/out.csv', 'w').write('a\\n')"
+    )
+    res = ex.execute(code, df=orders, generated_datasets_path=gen)
+    assert res.ok, res.error
+    assert res.generated_datasets == [os.path.join(gen, "out.csv")]
+    assert os.path.isfile(os.path.join(gen, "out.csv"))
+
+    os.makedirs("kept")
+    ex.execute("x = 1", df=orders, generated_datasets_path="kept/new")
+    assert os.path.isdir("kept") and not os.path.exists("kept/new")
+
+
 # ---------------------------------------------------------------- sanitizer
 
 

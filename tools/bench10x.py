@@ -23,8 +23,10 @@ tier where compute dominates:
 The synthetic dir's basename parses as sf=-1, so bench.py's full-scale
 sidecar/carried machinery never fires (subset runs are guarded too).
 
-Usage: python tools/bench10x.py [--cpus 32,8] [--out BENCH_10X_r14.json]
+Usage: python tools/bench10x.py [--cpus N,N/2] [--out BENCH_10X_r14.json]
        [--only name1,name2]   (default: the heavy-spec sets below)
+``--cpus`` defaults to ``session.default_parallelism()`` (the CPUs this
+process may run on) and half of it.
 """
 
 from __future__ import annotations
@@ -193,8 +195,12 @@ def _run_bench(cpus: int, names: list[str], iters: int) -> dict:
 
 
 def main() -> int:
+    sys.path.insert(0, REPO)
+    from bambooai_spark.session import default_parallelism  # noqa: PLC0415
+
+    n = default_parallelism()
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cpus", default="32,8")
+    ap.add_argument("--cpus", default=f"{n},{max(1, n // 2)}")
     ap.add_argument("--out", default=os.path.join(REPO, "BENCH_10X_r14.json"))
     ap.add_argument("--only", default="")
     ap.add_argument("--scan-iters", type=int, default=2)

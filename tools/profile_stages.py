@@ -23,10 +23,11 @@ import time
 def main() -> int:
     name = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    cpus = int(sys.argv[3]) if len(sys.argv) > 3 else 32
-    evdir = tempfile.mkdtemp(prefix="bbai_evlog_")
     from bambooai_spark.caching import release_caches
-    from bambooai_spark.session import get_session
+    from bambooai_spark.session import default_parallelism, get_session
+
+    cpus = int(sys.argv[3]) if len(sys.argv) > 3 else default_parallelism()
+    evdir = tempfile.mkdtemp(prefix="bbai_evlog_")
     from bambooai_spark.suite import SPECS
 
     spark = get_session(

@@ -271,10 +271,8 @@ def delta_surgery_evidence(
 
 
 def main() -> int:
-    spark = get_session(
-        "bambooai-spark-stress",
-        cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-    )
+    # get_session's core count is session.default_parallelism()
+    spark = get_session("bambooai-spark-stress")
     ddir, edir = synthesize(spark)
     base_docs = load_table(spark, SF_DIR, "documents")
     base_embs = load_table(spark, SF_DIR, "embeddings")
